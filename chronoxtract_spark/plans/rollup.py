@@ -701,140 +701,141 @@ class RollupEngine:
         t = time.time()
         observed = self.build_observed(transcripts)
         observed.cache()
-        counts: dict[str, int] = {}
-
-        skips = {
-            tier: (self.committed_days(tier, source_snapshot) if resume else set())
-            for tier in TIERS
-        }
-        all_days = self._candidate_days(observed)  # materializes the cache
-        new_1m = [d for d in all_days if d not in skips["rollup_1m"]]
-        new_1h = [d for d in all_days if d not in skips["rollup_1h"]]
-        new_1d = [d for d in all_days if d not in skips["rollup_1d"]]
-        t = mark("plan_and_skip", t)
-
-        def _day_filter(df, new_days, col="day"):
-            """Resume filter, skipped entirely on a fresh run: the
-            gap-fill fan-out only emits days inside the candidate span
-            union, so when nothing is committed yet the isin is a
-            per-row no-op that still costs real time on the dense tier
-            (BENCH/W1M_COMPONENTS.md: ~3s/40M rows at 8c). Date
-            literals, so a DATE column compares integers."""
-            if len(new_days) == len(all_days):
-                return df
-            return df.filter(F.to_date(F.col(col)).isin(_day_dates(new_days)))
-
-        # -- 1m tier: stream the dense plan straight into the partitioned
-        # write (never cached — the dense fan-out only exists in this one
-        # pass); per-day counts + checksums come from the write action.
-        # DAY-KEYED fan-out (guide §8): the observed-scale segment rows
-        # shuffle on (day, salt) BEFORE the ~1000x minute explode, so
-        # each write task owns ~one day partition — no per-task sort by
-        # partition key, no hundred-writer memory pressure, and day
-        # files come out task-sized (row set identical to the conv-keyed
-        # fan-out; tests pin the equivalence).
-        #
-        # (An overlapped variant — dense write on a pool thread while
-        # the chunk/kernel legs run, guide §2.6 — was measured and
-        # REVERTED: all legs here are CPU/memory-bandwidth-bound on the
-        # same cores, and the interleaving ran the whole pipeline
-        # 1.6x SLOWER than sequential legs at sf1.0.)
-        if new_1m:
-            base = gap_fill_minutes_day_keyed(observed, len(all_days))
-            tier_1m = _day_filter(self.build_rollup_1m(base), new_1m)
-            counts["rollup_1m"] = self._write_with_lineage(
-                tier_1m, "rollup_1m", new_1m, source_snapshot
-            )
-        else:
-            counts["rollup_1m"] = 0
-        t = mark("write_1m", t)
-
-        if new_1m and self.compress:
-            chunks = _day_filter(self.build_chunks(observed), new_1m)
-            self._write_with_lineage(
-                chunks, CHUNK_TABLE, new_1m, source_snapshot,
-                day_repartition=True,
-                observe_day_cap=MAX_OBSERVE_DAYS_SMALL,
-            )
-            t = mark("chunks", t)
-
-        # -- 1h + 1d tiers: one shared kernel pass (core mode)
-        # computes both tiers' windows from the same in-kernel dense
-        # series; the SQL path aggregates the dense plan for 1h and
-        # re-sums 1h state for 1d (hierarchical, moments-only — full
-        # 1d quantiles/features are the kernel path's job)
-        need = sorted(set(new_1h) | set(new_1d))
         cached = None
-        if need and self.kernel_features and self.feature_mode == "core":
-            combined = _day_filter(
-                self.build_rollup_tiers_kernel(observed), need
-            ).cache()
-            cached = combined
-            tier_1h = (
-                combined.filter(F.col("bucket_seconds") == 3600)
-                .drop("bucket_seconds", "bucket_epoch")
-                .withColumnRenamed("bucket_ts", "hour_ts")
-            )
-            tier_1h = (
-                _day_filter(tier_1h, new_1h) if new_1h
-                else tier_1h.filter(F.lit(False))
-            )
-            tier_1d = (
-                combined.filter(F.col("bucket_seconds") == 86400)
-                .drop("bucket_seconds", "bucket_epoch")
-                .withColumnRenamed("bucket_ts", "day_ts")
-            )
-            tier_1d = (
-                _day_filter(tier_1d, new_1d) if new_1d
-                else tier_1d.filter(F.lit(False))
-            )
-        elif need:
-            base = gap_fill_minutes(observed).withColumn(
-                "day", F.to_date("minute_ts")
-            )
-            tier_1h_all = _day_filter(
-                self.build_rollup_1h(
-                    base, observed=observed if self.kernel_features else None
-                ),
-                need,
-            ).cache()
-            cached = tier_1h_all
-            tier_1h = (
-                _day_filter(tier_1h_all, new_1h) if new_1h
-                else tier_1h_all.filter(F.lit(False))
-            )
-            tier_1d = self.build_rollup_1d_from_1h(tier_1h_all)
-            tier_1d = (
-                _day_filter(tier_1d, new_1d) if new_1d
-                else tier_1d.filter(F.lit(False))
-            )
-        else:
-            tier_1h = tier_1d = None
+        try:
+            counts: dict[str, int] = {}
 
-        counts["rollup_1h"] = (
-            self._write_with_lineage(
-                tier_1h, "rollup_1h", new_1h, source_snapshot,
-                day_repartition=True,
-                observe_day_cap=MAX_OBSERVE_DAYS_SMALL,
-            )
-            if tier_1h is not None and new_1h
-            else 0
-        )
-        t = mark("write_1h", t)
-        counts["rollup_1d"] = (
-            self._write_with_lineage(
-                tier_1d, "rollup_1d", new_1d, source_snapshot,
-                day_repartition=True,
-                observe_day_cap=MAX_OBSERVE_DAYS_SMALL,
-            )
-            if tier_1d is not None and new_1d
-            else 0
-        )
-        t = mark("write_1d", t)
+            skips = {
+                tier: (self.committed_days(tier, source_snapshot) if resume else set())
+                for tier in TIERS
+            }
+            all_days = self._candidate_days(observed)  # materializes the cache
+            new_1m = [d for d in all_days if d not in skips["rollup_1m"]]
+            new_1h = [d for d in all_days if d not in skips["rollup_1h"]]
+            new_1d = [d for d in all_days if d not in skips["rollup_1d"]]
+            t = mark("plan_and_skip", t)
 
-        if cached is not None:
-            cached.unpersist()
-        observed.unpersist()
+            def _day_filter(df, new_days, col="day"):
+                """Resume filter, skipped entirely on a fresh run: the
+                gap-fill fan-out only emits days inside the candidate span
+                union, so when nothing is committed yet the isin is a
+                per-row no-op that still costs real time on the dense tier
+                (BENCH/W1M_COMPONENTS.md: ~3s/40M rows at 8c). Date
+                literals, so a DATE column compares integers."""
+                if len(new_days) == len(all_days):
+                    return df
+                return df.filter(F.to_date(F.col(col)).isin(_day_dates(new_days)))
+
+            # -- 1m tier: stream the dense plan straight into the partitioned
+            # write (never cached — the dense fan-out only exists in this one
+            # pass); per-day counts + checksums come from the write action.
+            # DAY-KEYED fan-out (guide §8): the observed-scale segment rows
+            # shuffle on (day, salt) BEFORE the ~1000x minute explode, so
+            # each write task owns ~one day partition — no per-task sort by
+            # partition key, no hundred-writer memory pressure, and day
+            # files come out task-sized (row set identical to the conv-keyed
+            # fan-out; tests pin the equivalence).
+            #
+            # (An overlapped variant — dense write on a pool thread while
+            # the chunk/kernel legs run, guide §2.6 — was measured and
+            # REVERTED: all legs here are CPU/memory-bandwidth-bound on the
+            # same cores, and the interleaving ran the whole pipeline
+            # 1.6x SLOWER than sequential legs at sf1.0.)
+            if new_1m:
+                base = gap_fill_minutes_day_keyed(observed, len(all_days))
+                tier_1m = _day_filter(self.build_rollup_1m(base), new_1m)
+                counts["rollup_1m"] = self._write_with_lineage(
+                    tier_1m, "rollup_1m", new_1m, source_snapshot
+                )
+            else:
+                counts["rollup_1m"] = 0
+            t = mark("write_1m", t)
+
+            if new_1m and self.compress:
+                chunks = _day_filter(self.build_chunks(observed), new_1m)
+                self._write_with_lineage(
+                    chunks, CHUNK_TABLE, new_1m, source_snapshot,
+                    day_repartition=True,
+                    observe_day_cap=MAX_OBSERVE_DAYS_SMALL,
+                )
+                t = mark("chunks", t)
+
+            # -- 1h + 1d tiers: one shared kernel pass (core mode)
+            # computes both tiers' windows from the same in-kernel dense
+            # series; the SQL path aggregates the dense plan for 1h and
+            # re-sums 1h state for 1d (hierarchical, moments-only — full
+            # 1d quantiles/features are the kernel path's job)
+            need = sorted(set(new_1h) | set(new_1d))
+            if need and self.kernel_features and self.feature_mode == "core":
+                combined = _day_filter(
+                    self.build_rollup_tiers_kernel(observed), need
+                ).cache()
+                cached = combined
+                tier_1h = (
+                    combined.filter(F.col("bucket_seconds") == 3600)
+                    .drop("bucket_seconds", "bucket_epoch")
+                    .withColumnRenamed("bucket_ts", "hour_ts")
+                )
+                tier_1h = (
+                    _day_filter(tier_1h, new_1h) if new_1h
+                    else tier_1h.filter(F.lit(False))
+                )
+                tier_1d = (
+                    combined.filter(F.col("bucket_seconds") == 86400)
+                    .drop("bucket_seconds", "bucket_epoch")
+                    .withColumnRenamed("bucket_ts", "day_ts")
+                )
+                tier_1d = (
+                    _day_filter(tier_1d, new_1d) if new_1d
+                    else tier_1d.filter(F.lit(False))
+                )
+            elif need:
+                base = gap_fill_minutes(observed).withColumn(
+                    "day", F.to_date("minute_ts")
+                )
+                tier_1h_all = _day_filter(
+                    self.build_rollup_1h(
+                        base, observed=observed if self.kernel_features else None
+                    ),
+                    need,
+                ).cache()
+                cached = tier_1h_all
+                tier_1h = (
+                    _day_filter(tier_1h_all, new_1h) if new_1h
+                    else tier_1h_all.filter(F.lit(False))
+                )
+                tier_1d = self.build_rollup_1d_from_1h(tier_1h_all)
+                tier_1d = (
+                    _day_filter(tier_1d, new_1d) if new_1d
+                    else tier_1d.filter(F.lit(False))
+                )
+            else:
+                tier_1h = tier_1d = None
+
+            counts["rollup_1h"] = (
+                self._write_with_lineage(
+                    tier_1h, "rollup_1h", new_1h, source_snapshot,
+                    day_repartition=True,
+                    observe_day_cap=MAX_OBSERVE_DAYS_SMALL,
+                )
+                if tier_1h is not None and new_1h
+                else 0
+            )
+            t = mark("write_1h", t)
+            counts["rollup_1d"] = (
+                self._write_with_lineage(
+                    tier_1d, "rollup_1d", new_1d, source_snapshot,
+                    day_repartition=True,
+                    observe_day_cap=MAX_OBSERVE_DAYS_SMALL,
+                )
+                if tier_1d is not None and new_1d
+                else 0
+            )
+            t = mark("write_1d", t)
+        finally:
+            if cached is not None:
+                cached.unpersist()
+            observed.unpersist()
         self.last_timings = timings
         return counts
 

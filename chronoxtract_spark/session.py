@@ -4,13 +4,31 @@ Local-mode defaults mirror what a multi-executor deployment would set
 via spark-submit: AQE with skew-join splitting (the north rule's
 mega-thread clause), Arrow transport for every pandas UDF, and shuffle
 partition counts sized to the core count rather than the 200 default.
+The driver heap is sized from the memory the machine has available.
 """
 
 from __future__ import annotations
 
+import logging
 import os
+import shutil
 
 from pyspark.sql import SparkSession
+
+log = logging.getLogger(__name__)
+
+#: applicationId of every SparkContext the engine warm-up has run on
+_warmed: set[str] = set()
+
+
+def driver_memory(meminfo: str) -> str:
+    """Driver heap for a host, given the text of ``/proc/meminfo``:
+    half of MemAvailable in whole GiB, at least 1g."""
+    for line in meminfo.splitlines():
+        if line.startswith("MemAvailable:"):
+            kib = int(line.split()[1])
+            return f"{max(1, kib // 2 // (1 << 20))}g"
+    raise ValueError("no MemAvailable line in meminfo")
 
 
 def get_spark(
@@ -22,8 +40,10 @@ def get_spark(
     """Build (or fetch) a SparkSession.
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (all cores when
-    unset). On a real cluster the same configs ship via spark-submit;
-    nothing here is local-only except the driver memory sizing.
+    unset). The driver heap is ``$SPARK_DRIVER_MEM`` when set, else
+    half of the host's available memory. On a real cluster the same
+    configs ship via spark-submit. The engine warm-up runs once per
+    SparkContext, so repeated calls return the session as-is.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     if master is None:
@@ -33,6 +53,10 @@ def get_spark(
             shuffle_partitions = max(int(cpus), 8)
         except ValueError:
             shuffle_partitions = os.cpu_count() or 8
+    memory = os.environ.get("SPARK_DRIVER_MEM")
+    if not memory:
+        with open("/proc/meminfo") as f:
+            memory = driver_memory(f.read())
 
     builder = (
         SparkSession.builder.master(master)
@@ -43,28 +67,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
-        # Commit and pre-fault the whole heap at JVM startup. On this
-        # virtualized host, any multi-GB allocation burst (including
-        # the bench's own pre-run canaries) leaves NEW page allocations
-        # slow for minutes afterwards; without pre-touch that penalty
-        # lands inside the first heavy jobs (measured: the sf1.0 rollup
-        # ran 174 s when started right after the canary burst vs 90 s
-        # with pre-touch — and 103 s with no canaries at all). Xms=Xmx
-        # + AlwaysPreTouch moves every first-touch fault into (untimed)
-        # session startup — the standard JVM practice for
-        # latency-sensitive services; on a cluster the same pair goes
-        # in spark.executor.extraJavaOptions. Opt out with
-        # SPARK_GRAFT_NO_PRETOUCH=1 (e.g. memory-constrained hosts).
-        .config(
-            "spark.driver.extraJavaOptions",
-            ""
-            if os.environ.get("SPARK_GRAFT_NO_PRETOUCH")
-            else (
-                f"-Xms{os.environ.get('SPARK_DRIVER_MEM', '48g')} "
-                "-XX:+AlwaysPreTouch"
-            ),
-        )
+        .config("spark.driver.memory", memory)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         # Dynamic-partition writes default to the SORT-based writer
@@ -78,168 +81,62 @@ def get_spark(
         # a handful; this bench's 30-day backfill: 30). Beyond the cap
         # Spark falls back to sorting the remainder, so an oversized
         # backfill degrades gracefully rather than OOMing.
-        .config(
-            "spark.sql.maxConcurrentOutputFileWriters",
-            os.environ.get("SPARK_GRAFT_MAX_WRITERS", "64"),
-        )
+        .config("spark.sql.maxConcurrentOutputFileWriters", "64")
         # zstd: ~1.5x faster than this JVM's snappy path at equal size
         # on the dense write (measured), and the guide-recommended
         # codec for scan-heavy tables (§6).
-        .config(
-            "spark.sql.parquet.compression.codec",
-            os.environ.get("SPARK_GRAFT_PARQUET_CODEC", "zstd"),
-        )
+        .config("spark.sql.parquet.compression.codec", "zstd")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    _warm_python_workers(spark)
-    _warm_jvm_paths(spark)
-    _warm_engine_paths(spark)
+    app_id = spark.sparkContext.applicationId
+    if app_id not in _warmed:
+        _warmed.add(app_id)
+        _warm_engine_paths(spark)
     return spark
 
 
-def _warm_python_workers(spark: SparkSession) -> None:
-    """Pre-start one reusable Python worker per core with the heavy
-    imports (numpy/pandas/pyarrow) already loaded.
-
-    Spawning 32 workers concurrently under the FIRST real grouped-map
-    job — while large Arrow batches stream — measured 60+ s of
-    one-time overhead on the sf1.0 kernel pass (79 s cold vs 15-17 s
-    warm, and a 4 s trivial warm-up job removes it). Workers are
-    reused across jobs (``spark.python.worker.reuse`` default), so
-    this touches NO data and runs once per session — the Python-side
-    analogue of JVM startup. Disable with SPARK_GRAFT_NO_WARMUP=1."""
-    if os.environ.get("SPARK_GRAFT_NO_WARMUP"):
-        return
-    try:
-        n = spark.sparkContext.defaultParallelism
-
-        def _ident(batches):
-            import numpy  # noqa: F401  (loads into the reused worker)
-            import pandas  # noqa: F401
-            import pyarrow  # noqa: F401
-
-            yield from batches
-
-        # mapInPandas over n explicit partitions: no shuffle, so AQE
-        # cannot coalesce it to one task — n concurrent tasks spawn n
-        # workers (a groupBy variant was AQE-coalesced to 1 task and
-        # warmed 5 workers out of 32)
-        spark.range(0, n, 1, n).mapInPandas(_ident, schema="id long").count()
-    except Exception:
-        pass  # warm-up is best-effort; a failure must never block startup
-
-
-def _warm_jvm_paths(spark: SparkSession) -> None:
-    """Exercise the JVM one-time machinery on a few synthetic rows.
-
-    The first real job of a session pays codegen/JIT compilation, the
-    shuffle stack, the grouped-map Arrow serializer classes, and the
-    parquet write path (committer init + codec native lib). Measured
-    on the sf0.1 rollup: the first run in a session costs ~10 s more
-    than a warm repeat even with the Python workers pre-spawned. Like
-    ``_warm_python_workers`` this touches no input data — it runs the
-    same engine code paths over ``spark.range`` rows once per session,
-    the JVM analogue of worker pre-spawn. Shares the
-    SPARK_GRAFT_NO_WARMUP opt-out (SPARK_GRAFT_NO_JVM_WARMUP disables
-    just this half)."""
-    if os.environ.get("SPARK_GRAFT_NO_WARMUP") or os.environ.get(
-        "SPARK_GRAFT_NO_JVM_WARMUP"
-    ):
-        return
-    try:
-        import shutil
-        import tempfile
-
-        from pyspark.sql import functions as F
-        from pyspark.sql.window import Window
-
-        df = spark.range(0, 256, 1, 8).select(
-            (F.col("id") % 16).alias("k"),
-            F.col("id").cast("double").alias("v"),
-        )
-        # shuffle + ObjectHashAggregate + window + broadcast-join codegen
-        agg = df.groupBy("k").agg(
-            F.sum("v").alias("s"), F.count("*").alias("c")
-        )
-        win = df.withColumn(
-            "r", F.row_number().over(Window.partitionBy("k").orderBy("v"))
-        )
-        win.join(F.broadcast(agg), "k").count()
-
-        # grouped-map Arrow path (applyInPandas serializer classes —
-        # distinct from mapInPandas, which the worker warm-up used)
-        def _gsum(pdf):
-            return pdf.groupby("k", as_index=False).agg({"v": "sum"})
-
-        df.groupBy("k").applyInPandas(_gsum, schema="k long, v double").count()
-
-        # parquet write path: committer init + session codec native lib
-        tmp = tempfile.mkdtemp(prefix="cx_warm_")
-        try:
-            agg.withColumn("day", F.lit("1970-01-01")).write.mode(
-                "overwrite"
-            ).partitionBy("day").parquet(f"{tmp}/warm")
-            spark.read.parquet(f"{tmp}/warm").count()
-        finally:
-            shutil.rmtree(tmp, ignore_errors=True)
-    except Exception:
-        pass  # warm-up is best-effort; a failure must never block startup
-
-
 def _warm_engine_paths(spark: SparkSession) -> None:
-    """Run the rollup pipeline once over a tiny synthetic input so the
-    hot engine code is C2-JIT-compiled before the first real job.
+    """Run the rollup pipeline once over a tiny synthetic input, so the
+    first real job of a session does not pay the one-time costs.
 
-    The micro warm-up above compiles the cold-start *classes* but the
-    heavy loops (dense explode, moment aggregation, partitioned
-    parquet write, chunk kernels) still run their first real
-    iterations in the interpreter/C1 tier: measured at sf0.1, the
-    first `RollupEngine.run` of a session cost ~24-26 s with the micro
-    warm-up vs 16-19 s for warm repeats, and an 8-conversation
-    synthetic pipeline pass (seed=1, ``chronoxtract_spark.synth`` — the
-    same warm-up tools/scaling_bench.py has always used per leg)
-    closes most of that gap (first real run 19.5-23.8 s across
-    interleaved A/B trials). Input is generated from ``spark.range``,
-    written to a private temp warehouse and deleted — no external data
-    is read and nothing persists. Opt-outs: SPARK_GRAFT_NO_WARMUP
-    (all warm-up) / SPARK_GRAFT_NO_DEEP_WARMUP (just this stage, e.g.
-    for short-lived CLI sessions where startup latency matters more
-    than first-job latency)."""
-    if os.environ.get("SPARK_GRAFT_NO_WARMUP") or os.environ.get(
-        "SPARK_GRAFT_NO_DEEP_WARMUP"
-    ):
-        return
+    The first job of a session spawns the Python workers, loads the
+    grouped-map Arrow serializers, initializes the parquet scan,
+    shuffle, window and partitioned-write paths, and runs the hot loops
+    (dense explode, moment aggregation, chunk kernels) in the
+    interpreter before the JIT compiles them. Measured at sf0.1, the
+    first ``RollupEngine.run`` of a session cost ~24-26 s vs 16-19 s
+    for warm repeats; one synthetic pipeline pass closes most of the
+    gap. Input is generated from ``spark.range`` and written as parquet
+    to a private temp warehouse, which is deleted afterwards, so no
+    external data is read and nothing persists. A failure is logged and
+    never blocks startup."""
+    from chronoxtract_spark.plans.rollup import RollupEngine
+    from chronoxtract_spark.sources import tableio
+    from chronoxtract_spark.synth import synth_transcripts
+
+    io = tableio.temp_warehouse(spark)
     try:
-        import shutil
-
-        from chronoxtract_spark.plans.rollup import RollupEngine
-        from chronoxtract_spark.sources.tableio import temp_warehouse
-        from chronoxtract_spark.synth import synth_transcripts
-
-        io = temp_warehouse(spark)
-        try:
-            eng = RollupEngine(
-                spark, io, kernel_features=True, compress=True
-            )
-            # Size the warm input to the session: every core must see a
-            # realistically-sized batch or the first REAL job still pays
-            # the worker/off-heap first-touch penalty. Measured at sf1
-            # (1M events, local[32]): an 8-conversation warm-up left the
-            # first rollup at 119.5 s vs 78.3 s warm repeats; 64
-            # conversations (2 per core, 13.4 s of untimed startup)
-            # brought the first run to 68.2 s — the warm floor.
-            n_conv = max(8, 2 * spark.sparkContext.defaultParallelism)
-            eng.run(
-                synth_transcripts(
-                    spark, n_conv, seed=1, min_turns=64, max_turns=256
-                ),
-                source_snapshot="warm",
-                resume=False,
-            )
-        finally:
-            shutil.rmtree(io.root, ignore_errors=True)
+        eng = RollupEngine(spark, io, kernel_features=True, compress=True)
+        # Size the warm input to the session: every core must see a
+        # realistically-sized batch or the first REAL job still pays
+        # the worker/off-heap first-touch penalty. Measured at sf1
+        # (1M events, local[32]): an 8-conversation warm-up left the
+        # first rollup at 119.5 s vs 78.3 s warm repeats; 64
+        # conversations (2 per core) brought the first run to 68.2 s,
+        # the warm floor.
+        n_conv = max(8, 2 * spark.sparkContext.defaultParallelism)
+        # read back from parquet like a real input table, so the scan
+        # path is warm too: without it the late batches after a backfill
+        # spent ~10 % more CPU on a 4-core host (perfbench commit_cpu_s)
+        src = os.path.join(io.root, "warm_input")
+        synth_transcripts(
+            spark, n_conv, seed=1, min_turns=64, max_turns=256
+        ).write.parquet(src)
+        eng.run(spark.read.parquet(src), source_snapshot="warm", resume=False)
     except Exception:
-        pass  # warm-up is best-effort; a failure must never block startup
+        log.warning("engine warm-up failed; the first job runs cold", exc_info=True)
+    finally:
+        shutil.rmtree(io.root, ignore_errors=True)

@@ -22,6 +22,7 @@ rebuilds) is exercised through this API on either backend.
 
 from __future__ import annotations
 
+import logging
 import os
 import shutil
 import uuid
@@ -29,6 +30,8 @@ import uuid
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+log = logging.getLogger(__name__)
 
 
 class ParquetBackend:
@@ -372,18 +375,15 @@ def get_tableio(spark: SparkSession, root: str | None = None):
     runtime-validated here; the Iceberg path has a jar-gated test
     (tests/test_operators_extra.py::TestIcebergBackend) that executes
     wherever ``spark.cx.iceberg.catalog`` actually resolves."""
-    import sys
-
     catalog = spark.conf.get("spark.cx.iceberg.catalog", None)
     if catalog:
         try:
             return IcebergBackend(spark, catalog)
         except Exception as e:
-            print(
-                f"[tableio] Iceberg catalog '{catalog}' configured but "
-                f"unusable ({type(e).__name__}: {e}); falling back to the "
-                "Parquet backend",
-                file=sys.stderr,
+            log.warning(
+                "Iceberg catalog %r configured but unusable (%s: %s); "
+                "falling back to the Parquet backend",
+                catalog, type(e).__name__, e,
             )
     if root is None:
         root = os.environ.get(

@@ -9,10 +9,12 @@ the batch-incremental equivalent of a watermark + windowed re-agg.
 
 from __future__ import annotations
 
+from datetime import date, timedelta
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from chronoxtract_spark.plans.rollup import RollupEngine
+from chronoxtract_spark.plans.rollup import RollupEngine, _day_dates
 
 
 def affected_days(new_rows: DataFrame, ts_col: str = "ts") -> list[str]:
@@ -46,10 +48,27 @@ def incremental_rollup(
     source snapshot, so a retry of the same batch is a no-op
     (idempotent exactly-once commit).
     """
-    days = affected_days(new_rows)
-    if not days:
-        return {"rollup_1m": 0, "rollup_1h": 0, "rollup_1d": 0}
-    from chronoxtract_spark.plans.rollup import _day_dates
+    counts = {"rollup_1m": 0, "rollup_1h": 0, "rollup_1d": 0}
+    # One engine run per stretch of consecutive days: it gap-fills every
+    # day between a conversation's first and last row, so one run over
+    # days d and d+2 would overwrite day d+1 from input lacking its rows.
+    for days in _consecutive_runs(affected_days(new_rows)):
+        subset = all_transcripts.filter(F.to_date("ts").isin(_day_dates(days)))
+        for tier, n in engine.run(
+            subset, source_snapshot=source_snapshot, resume=True
+        ).items():
+            counts[tier] += n
+    return counts
 
-    subset = all_transcripts.filter(F.to_date("ts").isin(_day_dates(days)))
-    return engine.run(subset, source_snapshot=source_snapshot, resume=True)
+
+def _consecutive_runs(days: list[str]) -> list[list[str]]:
+    """Sorted ISO days split into maximal runs of consecutive days."""
+    runs: list[list[str]] = []
+    prev = None
+    for d in days:
+        cur = date.fromisoformat(d)
+        if prev is None or cur - prev != timedelta(days=1):
+            runs.append([])
+        runs[-1].append(d)
+        prev = cur
+    return runs

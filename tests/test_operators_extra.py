@@ -383,6 +383,70 @@ class TestIncremental:
         assert days_touched  # something re-rolled
         shutil.rmtree(io.root, ignore_errors=True)
 
+    def test_incremental_rollup_keeps_day_between_late_days(self, spark):
+        # late rows on days d and d+2 of one conversation: day d+1 is
+        # not affected and must keep its committed 1m rows and lineage
+        import shutil
+
+        from chronoxtract_spark.plans.rollup import RollupEngine
+        from chronoxtract_spark.sources.tableio import temp_warehouse
+        from chronoxtract_spark.streaming import incremental_rollup
+
+        def turns(day, first):
+            return [
+                ("c1", first + i, "user", "hi", None, f"2026-03-0{day} 10:0{i}:00")
+                for i in range(3)
+            ]
+
+        def transcripts(rows):
+            return spark.createDataFrame(
+                rows,
+                "conv_id string, turn_idx int, role string, text string, "
+                "tool string, ts_raw string",
+            ).select(
+                "conv_id", "turn_idx", "role", "text", "tool",
+                F.to_timestamp("ts_raw").alias("ts"),
+            )
+
+        base_rows = turns(1, 0) + turns(2, 10) + turns(3, 20)
+        io = temp_warehouse(spark)
+        eng = RollupEngine(spark, io, kernel_features=False, compress=False)
+        eng.run(transcripts(base_rows), source_snapshot="v1")
+
+        def day_2():
+            rows = io.read("rollup_1m").filter(F.col("day") == "2026-03-02")
+            lineage = io.read("lineage").filter(
+                (F.col("tier") == "rollup_1m")
+                & (F.col("partition_key") == "2026-03-02")
+            )
+            return (
+                sorted(map(str, rows.collect())),
+                sorted(
+                    (r.source_snapshot, r.row_count, r.checksum)
+                    for r in lineage.collect()
+                ),
+            )
+
+        before = day_2()
+        assert before[0] and before[1]
+        late_rows = turns(1, 30) + turns(3, 40)
+        counts = incremental_rollup(
+            eng,
+            transcripts(base_rows + late_rows),
+            transcripts(late_rows),
+            source_snapshot="v2",
+        )
+        assert counts["rollup_1m"] > 0
+        assert day_2() == before
+        v2_days = {
+            r.partition_key
+            for r in io.read("lineage")
+            .filter(F.col("source_snapshot") == "v2")
+            .collect()
+        }
+        assert v2_days == {"2026-03-01", "2026-03-03"}
+        shutil.rmtree(io.root, ignore_errors=True)
+
 
 class TestEmbeddingNearDups:
     def test_lsh_matches_brute_force(self, spark):

@@ -330,6 +330,29 @@ class TestRollupPipeline:
         # no duplicated rows after the no-op rerun
         assert io.read("rollup_1m").count() == counts["rollup_1m"]
 
+    def test_failed_run_releases_caches(self, spark, transcripts, monkeypatch):
+        """A run that fails partway through the 1h write leaves no
+        cached frame behind (the observed rows and the kernel cache)."""
+        import shutil
+
+        io = temp_warehouse(spark)
+        eng = RollupEngine(spark, io, kernel_features=True, compress=False)
+        write = eng._write_with_lineage
+
+        def failing_write(df, table, *args, **kwargs):
+            if table == "rollup_1h":
+                df.count()  # materialize the kernel cache, then fail
+                raise RuntimeError("injected 1h write failure")
+            return write(df, table, *args, **kwargs)
+
+        monkeypatch.setattr(eng, "_write_with_lineage", failing_write)
+        persistent = spark.sparkContext._jsc.getPersistentRDDs
+        before = persistent().size()
+        with pytest.raises(RuntimeError, match="injected"):
+            eng.run(transcripts, source_snapshot="fail")
+        assert persistent().size() == before
+        shutil.rmtree(io.root, ignore_errors=True)
+
     def test_retention_deletes_partitions(self, spark, engine_run):
         io, eng, _counts = engine_run
         days = io.list_partitions("rollup_1m", "day")
