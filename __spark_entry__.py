@@ -1419,18 +1419,21 @@ def _rollup_1h_tier(spark, sf_dir):
         F.lit(None).cast("string").alias("tool"),
         "ts",
     )
-    eng = RollupEngine(spark, temp_warehouse(spark), kernel_features=False, compress=False)
-    base = eng.build_base_series(ev)
-    return eng.build_rollup_1h(base)
+    eng = RollupEngine(spark, temp_warehouse(spark), compress=False)
+    return (
+        eng.build_rollup_tiers_kernel(eng.build_observed(ev))
+        .filter(F.col("bucket_seconds") == 3600)
+        .withColumnRenamed("bucket_ts", "hour_ts")
+    )
 
 
 def q_rollup_tiers(spark, sf_dir):
-    """North-rule flagship: events-as-transcripts → gap-filled 1m base →
-    1h tier (plans.rollup). The driver surface is the tier's mergeable
-    moment state + derived moments (reference semantics:
-    src/stats/mod.rs:25-79 distributed); the approx-quantile sketch
-    columns are verified both here (exact window percentiles) and in
-    the sibling ``rollup_quantiles``.
+    """North-rule flagship: events-as-transcripts → the production 1h
+    tier, exactly as RollupEngine.run writes it (the shared 1h+1d kernel
+    pass, plans.rollup.build_rollup_tiers_kernel). The query surface is
+    the tier's mergeable moment state + derived moments (reference
+    semantics: src/stats/mod.rs:25-79 distributed) and its exact window
+    quantiles (also checked alone by the sibling ``rollup_quantiles``).
     Every order-sensitive float sum (mean, variance, skew/kurt, sum,
     energy) is quantized with the epsilon-biased integer-unit trick
     (see q_hierarchical_moments); skew/kurt are additionally gated on
@@ -1621,9 +1624,7 @@ def q_retention_expiry(spark, sf_dir):
             )
         ).collect()[0][0]
     )
-    eng = RollupEngine(
-        spark, temp_warehouse(spark), kernel_features=False, compress=False
-    )
+    eng = RollupEngine(spark, temp_warehouse(spark), compress=False)
     eng.run(ev, source_snapshot="retention_demo", resume=False)
     before = {
         t: sorted(eng.io.list_partitions(t, "day"))

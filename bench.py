@@ -37,8 +37,9 @@ def noise_canary() -> float:
     return round(time.time() - t0, 3)
 
 
-def parallel_noise_canary(n: int = 8) -> list[float]:
-    """n concurrent core-pinned copies of the single-thread canary.
+def parallel_noise_canary() -> list[float]:
+    """Concurrent copies of the single-thread canary, one pinned to each
+    CPU this process may run on.
     The single-thread probe is blind to MULTI-core contention: on
     2026-08-19 a storm made this bench ~3-6x slower at local[32] while
     the single-thread canary read a healthy 0.86 s — but 8 pinned
@@ -54,14 +55,13 @@ def parallel_noise_canary(n: int = 8) -> list[float]:
         "for _ in range(12): np.fft.rfft(x)\n"
         "print(round(time.time()-t0,3))"
     )
-    n = min(n, os.cpu_count() or 1)
     have_taskset = shutil.which("taskset") is not None
     procs = []
     try:
-        for i in range(n):
+        for cpu in sorted(os.sched_getaffinity(0)):
             cmd = [sys.executable, "-c", code]
             if have_taskset:
-                cmd = ["taskset", "-c", str(i)] + cmd
+                cmd = ["taskset", "-c", str(cpu)] + cmd
             procs.append(subprocess.Popen(cmd, stdout=subprocess.PIPE, text=True))
         return sorted(float(p.communicate()[0].strip()) for p in procs)
     except (OSError, ValueError):
@@ -76,7 +76,7 @@ def bandwidth_canary(n: int = 8) -> list[float]:
     """n core-pinned STREAM-triad workers; returns sorted per-worker
     GB/s. Detects the MEMORY-BANDWIDTH steal mode the cache-resident
     FFT canaries cannot see (characterized in BENCH/BASELINE.md and
-    tools/membw_probe.py): during one such storm on 2026-08-20 the
+    BENCH/W1M_COMPONENTS.md): during one such storm on 2026-08-20 the
     8-wide FFT canary read a healthy 0.885 s max while 8 triad workers
     read 4.4-11.0 GB/s each (quiet: ~9-11 GB/s every worker, ceiling
     efficiency 0.92). The asymmetric minimum is the storm signature —
@@ -152,7 +152,7 @@ def wait_for_quiet_window(
 ) -> dict:
     """Pre-flight gate (r4 verdict #2): BENCH_r04 was measured inside a
     host-contention storm its own sidecar detected but did not act on.
-    Before the expensive run, poll the 8-wide canary until the window
+    Before the expensive run, poll the host-wide canary until the window
     is quiet — median <= 1.05 s and max <= 1.35 s, the empirical quiet
     band (quiet readings ~0.65-1.0 s; storm readings 1.25-2.5 s) — or
     give up after ``max_tries`` polls and proceed with
@@ -222,7 +222,7 @@ def run_bench(sf_dir: str, cpus: str) -> dict:
 
 
     io = temp_warehouse(spark)
-    eng = RollupEngine(spark, io, kernel_features=True, compress=True)
+    eng = RollupEngine(spark, io)
     t0 = time.time()
     counts = eng.run(ev, source_snapshot="bench", resume=False)
     rollup_sec = time.time() - t0
@@ -320,5 +320,7 @@ def run_bench(sf_dir: str, cpus: str) -> dict:
 
 if __name__ == "__main__":
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get(
+        "SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0)))
+    )
     print(json.dumps(run_bench(sf_dir, cpus)))

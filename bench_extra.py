@@ -53,7 +53,7 @@ def run_rollup(spark, sf_dir: str) -> dict:
     ev.cache()
     ev.count()
     io = temp_warehouse(spark)
-    eng = RollupEngine(spark, io, kernel_features=True, compress=True)
+    eng = RollupEngine(spark, io)
     t0 = time.time()
     counts = eng.run(ev, source_snapshot="bench", resume=False)
     total = round(time.time() - t0, 3)

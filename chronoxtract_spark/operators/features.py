@@ -391,7 +391,7 @@ def core_features_batch(
 
 
 #: mergeable raw-moment state + exact window quantiles, emitted by the
-#: same kernel pass as the core features when ``with_state=True`` —
+#: same kernel pass as the core features (kernel_features_epoch_bucketed) —
 #: mirrors functions.moment_state_exprs (src/stats/mod.rs:25-43) and the
 #: reference's interpolated quantiles (src/stats/mod.rs:98-111)
 WINDOW_STATE_FIELDS = [
@@ -489,48 +489,33 @@ def _gather_windows(x: np.ndarray, starts: np.ndarray, length: int) -> np.ndarra
 
 def kernel_features_epoch_bucketed(
     df: DataFrame,
-    bucket_seconds: int | tuple[int, ...],
+    bucket_seconds: tuple[int, ...],
     conv_col: str = "conv_id",
     t_col: str = "t",
     value_col: str = "rate",
-    mode: str = "core",
-    regenerate_dense: bool = False,
-    with_state: bool = False,
 ) -> DataFrame:
-    """Like ``kernel_features_bucketed`` but over slim
-    ``(conv_id, epoch_seconds, value)`` input: integer bucketing and a
+    """Window state + core features for every tier width in
+    ``bucket_seconds`` (e.g. ``(3600, 86400)``) over slim *observed*
+    ``(conv_id, epoch_seconds, value)`` rows: integer bucketing and a
     single int64 argsort inside the kernel, zero datetime objects across
-    the Arrow boundary. Returns ``bucket_epoch`` (long) as the window key.
+    the Arrow boundary.
 
-    ``regenerate_dense``: input rows are the *observed* minutes; the
-    dense gap-filled series is rebuilt in-kernel
+    The dense gap-filled series is rebuilt in-kernel
     (kernel.gapfill.dense_from_observed) so the shuffle never carries
-    the ~1000x dense fan-out.
-
-    ``bucket_seconds`` may be a tuple of tier widths (e.g. ``(3600,
-    86400)``): every tier's windows are computed from the SAME in-kernel
-    dense series in ONE grouped-map pass — the marginal cost of a
-    coarser tier is just its window math, not a second shuffle + dense
-    regeneration. Multi-tier output carries an extra ``bucket_seconds``
-    (long) column identifying each row's tier.
+    the ~1000x dense fan-out, and every tier's windows are cut from that
+    SAME series in ONE grouped-map pass — the marginal cost of a coarser
+    tier is just its window math, not a second shuffle + dense
+    regeneration. One output row per (conv, ``bucket_seconds`` (long),
+    ``bucket_epoch`` (long)) window carries WINDOW_STATE_FIELDS +
+    CORE_FEATURE_FIELDS.
     """
     from chronoxtract_spark.kernel import gapfill as k_gapfill
 
-    tiers = (
-        tuple(int(b) for b in bucket_seconds)
-        if isinstance(bucket_seconds, (tuple, list))
-        else (int(bucket_seconds),)
-    )
-    multi = len(tiers) > 1
-    fields = CORE_FEATURE_FIELDS if mode == "core" else KERNEL_FEATURE_FIELDS
-    if with_state:
-        if mode != "core":
-            raise ValueError("with_state requires mode='core'")
-        fields = WINDOW_STATE_FIELDS + CORE_FEATURE_FIELDS
+    tiers = tuple(int(b) for b in bucket_seconds)
+    fields = WINDOW_STATE_FIELDS + CORE_FEATURE_FIELDS
     m = dict(df.dtypes)
-    tier_col = "bucket_seconds long, " if multi else ""
     schema = (
-        f"{conv_col} {m[conv_col]}, {tier_col}bucket_epoch long, "
+        f"{conv_col} {m[conv_col]}, bucket_seconds long, bucket_epoch long, "
         + ", ".join(f"{c} {t}" for c, t in fields)
     )
 
@@ -548,15 +533,6 @@ def kernel_features_epoch_bucketed(
         change = np.flatnonzero(brk) + 1
         starts = np.concatenate(([0], change))
         ends = np.concatenate((change, [len(x)]))
-        if mode == "full":
-            rows = []
-            for s, e in zip(starts, ends):
-                feats = compute_kernel_features(x[s:e])
-                feats["bucket_epoch"] = int(bucket[s])
-                rows.append(feats)
-            out = pd.DataFrame(rows)
-            out.insert(0, conv_col, conv_vals[conv_idx[starts]])
-            return out
         lengths = ends - starts
         n_win = len(starts)
         cols = {
@@ -566,19 +542,14 @@ def kernel_features_epoch_bucketed(
         for length in np.unique(lengths):
             sel = np.flatnonzero(lengths == length)
             mat = _gather_windows(x, starts[sel], int(length))
-            if with_state:
-                # one min/max reduction serves both the histogram
-                # scaling and the state columns (identical values)
-                mnk = mat.min(axis=1, keepdims=True)
-                mxk = mat.max(axis=1, keepdims=True)
-                feats = core_features_batch(mat, mn=mnk, mx=mxk)
-                feats.update(
-                    window_state_batch(
-                        mat, mn=mnk.ravel(), mx=mxk.ravel()
-                    )
-                )
-            else:
-                feats = core_features_batch(mat)
+            # one min/max reduction serves both the histogram scaling
+            # and the state columns (identical values)
+            mnk = mat.min(axis=1, keepdims=True)
+            mxk = mat.max(axis=1, keepdims=True)
+            feats = core_features_batch(mat, mn=mnk, mx=mxk)
+            feats.update(
+                window_state_batch(mat, mn=mnk.ravel(), mx=mxk.ravel())
+            )
             for c, _ in fields:
                 cols[c][sel] = feats[c]
         out = pd.DataFrame(cols)
@@ -596,29 +567,23 @@ def kernel_features_epoch_bucketed(
         cchange = np.flatnonzero(codes[1:] != codes[:-1]) + 1
         cstarts = np.concatenate(([0], cchange))
         cends = np.concatenate((cchange, [len(codes)]))
-        if regenerate_dense:
-            ts, xs, cidx = [], [], []
-            for s, e in zip(cstarts, cends):
-                td, xd, _turns, _obs = k_gapfill.dense_from_observed(
-                    t_raw[s:e], x_raw[s:e]
-                )
-                ts.append(td)
-                xs.append(xd)
-                cidx.append(np.full(td.size, codes[s], dtype=np.int64))
-            t = np.concatenate(ts) if ts else t_raw
-            x = np.concatenate(xs) if xs else x_raw
-            conv_idx = np.concatenate(cidx) if cidx else codes
-        else:
-            t, x, conv_idx = t_raw, x_raw, codes
+        ts, xs, cidx = [], [], []
+        for s, e in zip(cstarts, cends):
+            td, xd, _turns, _obs = k_gapfill.dense_from_observed(
+                t_raw[s:e], x_raw[s:e]
+            )
+            ts.append(td)
+            xs.append(xd)
+            cidx.append(np.full(td.size, codes[s], dtype=np.int64))
+        t = np.concatenate(ts) if ts else t_raw
+        x = np.concatenate(xs) if xs else x_raw
+        conv_idx = np.concatenate(cidx) if cidx else codes
         frames = []
         for width in tiers:
             f = windows_for(x, t, conv_idx, conv_vals, width)
-            if multi:
-                f.insert(1, "bucket_seconds", np.int64(width))
+            f.insert(1, "bucket_seconds", np.int64(width))
             frames.append(f)
-        return frames[0] if len(frames) == 1 else pd.concat(
-            frames, ignore_index=True
-        )
+        return pd.concat(frames, ignore_index=True)
 
     # BUCKETED grouping: one Arrow group per hash bucket of
     # conversations, not one per conversation — at many conversations
@@ -633,68 +598,3 @@ def kernel_features_epoch_bucketed(
     df = df.withColumn("_bkt", F.pmod(F.xxhash64(conv_col), F.lit(n_bkt)))
     df = df.repartition(max(par * 2, 16), "_bkt")
     return df.groupBy("_bkt").applyInPandas(fn, schema=schema).drop("_bkt")
-
-
-def kernel_features_bucketed(
-    df: DataFrame,
-    group_col: str,
-    bucket_col: str,
-    order_cols: list[str],
-    value_col: str = "value",
-    mode: str = "core",
-) -> DataFrame:
-    """Per-(group, bucket) kernel feature rows with **one Arrow batch per
-    group**, not per window: the window split happens inside the kernel
-    (numpy groupby on the bucket column). With ~720 hourly windows per
-    conversation-month, this cuts the grouped-map invocation count by
-    that factor — per-group pandas overhead is the dominant cost at
-    millions of windows.
-
-    mode='core' (default): the north-star feature set, vectorized in
-    batches of equal-length windows (core_features_batch) — ~50x faster
-    than the full battery. mode='full': every kernel feature per window
-    (entropy family, DFA, peaks...), one python call per window.
-    """
-    m = dict(df.dtypes)
-    fields = CORE_FEATURE_FIELDS if mode == "core" else KERNEL_FEATURE_FIELDS
-    schema = (
-        f"{group_col} {m[group_col]}, {bucket_col} {m[bucket_col]}, "
-        + ", ".join(f"{c} {t}" for c, t in fields)
-    )
-    order = list(order_cols)
-    val = value_col
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values([bucket_col, *order], kind="mergesort")
-        gval = pdf[group_col].iloc[0]
-        x = pdf[val].to_numpy(np.float64)
-        buckets = pdf[bucket_col].to_numpy()
-        # contiguous runs per bucket (sorted above)
-        change = np.flatnonzero(buckets[1:] != buckets[:-1]) + 1
-        starts = np.concatenate(([0], change))
-        ends = np.concatenate((change, [len(x)]))
-        bucket_vals = pdf[bucket_col].iloc[starts].to_numpy()
-        if mode == "full":
-            rows = []
-            for s, e, bv in zip(starts, ends, bucket_vals):
-                feats = compute_kernel_features(x[s:e])
-                feats[group_col] = gval
-                feats[bucket_col] = bv
-                rows.append(feats)
-            return pd.DataFrame(rows)
-        # core mode: batch windows of equal length
-        lengths = ends - starts
-        n_win = len(starts)
-        cols = {c: np.empty(n_win) for c, _ in CORE_FEATURE_FIELDS}
-        for length in np.unique(lengths):
-            sel = np.flatnonzero(lengths == length)
-            mat = _gather_windows(x, starts[sel], int(length))
-            feats = core_features_batch(mat)
-            for c, _ in CORE_FEATURE_FIELDS:
-                cols[c][sel] = feats[c]
-        out = pd.DataFrame(cols)
-        out.insert(0, bucket_col, bucket_vals)
-        out.insert(0, group_col, gval)
-        return out
-
-    return df.groupBy(group_col).applyInPandas(fn, schema=schema)

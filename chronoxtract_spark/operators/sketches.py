@@ -287,8 +287,8 @@ def tdigest_rollup_quantiles(
 ) -> DataFrame:
     """Merge fine-bucket digest STATES per (key, coarse bucket) and
     emit quantile estimates — hierarchical re-aggregation with no raw
-    re-scan (the t-digest face of build_rollup_1d_from_1h's moment-sum
-    pattern). Merge is order-insensitive (kernel re-sorts centroids),
+    re-scan (the t-digest face of the summed moment-state pattern,
+    q_hierarchical_moments). Merge is order-insensitive (kernel re-sorts centroids),
     so shuffle arrival order cannot change a single output bit."""
     from chronoxtract_spark.kernel.tdigest import (
         tdigest_merge,

@@ -15,10 +15,13 @@ Scale design (10^12 turns, 1000 executors):
   optional ``salt`` adds ``pmod(xxhash64(conv_id), salts)`` to
   pre-split pathological single-minute hot keys, and AQE skew-join
   splitting is on session-wide (session.get_spark).
-- 1h and 1d moment features derive from **summed raw-moment state**
-  (functions.moment_state_exprs), never from re-scanning the base —
-  the reference's own algebraic trick (src/stats/mod.rs:25-43)
-  distributed (SURVEY.md §4.3).
+- The 1h and 1d tiers come from ONE kernel pass over the observed
+  rows (build_rollup_tiers_kernel): the dense series is regenerated
+  in-kernel and both tiers' windows are cut from it, each carrying
+  mergeable raw-moment state (n, s1..s4, min, max — the reference's
+  algebraic trick, src/stats/mod.rs:25-43), exact window quantiles and
+  the north-star features; the moments are derived from that state by
+  column math (functions.moments_from_state).
 - Each day partition commits with a lineage row (row count, checksum,
   source snapshot); re-runs skip partitions whose lineage matches —
   the checkpoint/resume contract.
@@ -39,7 +42,6 @@ from chronoxtract_spark import functions as cxf
 from chronoxtract_spark.kernel import gapfill as k_gapfill
 from chronoxtract_spark.operators import features as ops_features
 from chronoxtract_spark.operators.gapfill import (
-    gap_fill_minutes,
     gap_fill_minutes_day_keyed,
     turn_rate_1m,
 )
@@ -48,36 +50,6 @@ TIERS = ("rollup_1m", "rollup_1h", "rollup_1d")
 LINEAGE_TABLE = "lineage"
 CHUNK_TABLE = "chunks_1m"
 
-_TDIGEST_QAGG = None
-
-
-def _tdigest_qagg_udf():
-    """Arrow grouped-agg UDF: the window's five tier quantiles from a
-    t-digest (kernel/tdigest.py, compression 200 — the same accuracy
-    class as the percentile_approx(200) alternative, but the sketch the
-    north star names, and deterministic: the kernel sorts, so shuffle
-    arrival order cannot change an output bit). Built lazily and cached
-    so importing this module never touches UDF registration."""
-    global _TDIGEST_QAGG
-    if _TDIGEST_QAGG is None:
-        from pyspark.sql.types import ArrayType, DoubleType
-
-        @F.pandas_udf(ArrayType(DoubleType()))
-        def td_q(v: pd.Series) -> list:
-            from chronoxtract_spark.kernel.tdigest import (
-                tdigest_build,
-                tdigest_quantiles,
-            )
-
-            x = v.to_numpy(np.float64)
-            x = x[~np.isnan(x)]
-            if not x.size:
-                return [float("nan")] * 5
-            m, w = tdigest_build(x, compression=200.0)
-            return tdigest_quantiles(m, w, [0.05, 0.25, 0.5, 0.75, 0.95])
-
-        _TDIGEST_QAGG = td_q
-    return _TDIGEST_QAGG
 
 #: per-day lineage metrics ride the write action itself (df.observe)
 #: up to this many day partitions per commit; beyond it the engine
@@ -129,10 +101,7 @@ class RollupEngine:
         spark: SparkSession,
         io,
         salts: int = 0,
-        kernel_features: bool = True,
         compress: bool = True,
-        feature_mode: str = "core",
-        quantiles: str = "exact",
         verify_readback: bool = False,
     ):
         self.spark = spark
@@ -147,18 +116,7 @@ class RollupEngine:
 
         self._lineage_lock = threading.Lock()
         self.salts = salts
-        self.kernel_features = kernel_features
         self.compress = compress
-        # 'core' = the north-star window features vectorized across
-        # windows; 'full' = the whole kernel battery per window
-        self.feature_mode = feature_mode
-        # 'exact' = sort-based interpolated percentile (windows are
-        # bounded, oracle-checkable); 'approx' = Spark's built-in
-        # Greenwald-Khanna percentile_approx; 'tdigest' = the north
-        # star's named sketch (kernel/tdigest.py, Arrow grouped-agg UDF,
-        # deterministic k-space-bucketing construction) for deployments
-        # that re-merge window quantiles across tiers
-        self.quantiles = quantiles
         # opt-in audit: after each tier write, re-read the written files
         # and check their per-day checksums against the in-flight
         # (observe) metrics — full write verification at the cost of one
@@ -372,16 +330,6 @@ class RollupEngine:
             )
         return turn_rate_1m(df)
 
-    def build_base_series(self, transcripts: DataFrame) -> DataFrame:
-        """transcripts → gap-filled per-minute turn-rate series with a
-        ``day`` partition column (north_star steps 2-3)."""
-        observed = self.build_observed(transcripts)
-        filled = gap_fill_minutes(observed)
-        # DATE, not a formatted string: to_date is integer arithmetic
-        # per dense row; the 'yyyy-MM-dd' render happens once per day
-        # at the surfaces that need text (lineage keys, partition dirs)
-        return filled.withColumn("day", F.to_date("minute_ts"))
-
     @staticmethod
     def _observed_slim(observed: DataFrame) -> DataFrame:
         """(conv_id, epoch minute, count) — the only data the dense-series
@@ -419,120 +367,12 @@ class RollupEngine:
             "day",
         )
 
-    def _window_tier(
-        self,
-        base: DataFrame,
-        trunc: str,
-        out_bucket: str,
-        observed: DataFrame | None = None,
-    ) -> DataFrame:
-        """Shared 1h/1d builder: mergeable moment state + exact summary
-        features + (optionally) whole-series kernel features per
-        (conv_id, bucket) window.
-
-        The kernel-feature pass ships only ``(conv_id, epoch, rate)``
-        through Arrow (12 bytes/row — no timestamp objects) and buckets
-        on integer epoch inside the kernel; the bucket timestamp is
-        reconstructed JVM-side for the join with the SQL state."""
-        bucketed = base.withColumn(out_bucket, F.date_trunc(trunc, "minute_ts"))
-        keys = ["conv_id", out_bucket]
-
-        qprobs = F.array(*[F.lit(q) for q in (0.05, 0.25, 0.5, 0.75, 0.95)])
-        if self.quantiles == "tdigest":
-            # Spark disallows grouped-agg pandas UDFs beside JVM
-            # aggregates in one .agg() (INVALID_PANDAS_UDF_PLACEMENT),
-            # so the digest rides a sibling aggregation joined on the
-            # tier keys — both sides leave their exchange hash-
-            # partitioned on those keys, so the join adds a sort but no
-            # third shuffle of the base
-            state = bucketed.groupBy(*keys).agg(
-                *cxf.moment_state_exprs("rate"),
-                F.first("day").alias("day"),
-            )
-            qdf = bucketed.groupBy(*keys).agg(
-                _tdigest_qagg_udf()("rate").alias("q_sketch")
-            )
-            state = state.join(qdf, keys)
-        else:
-            if self.quantiles == "exact":
-                # tier windows are bounded (<= 1440 points), so the
-                # exact sort-based percentile is cheap AND
-                # oracle-checkable; the sketch modes exist for
-                # deployments that re-merge window quantiles across
-                # tiers
-                qagg = F.percentile("rate", qprobs)
-            else:
-                qagg = F.percentile_approx("rate", qprobs, F.lit(200))
-            state = bucketed.groupBy(*keys).agg(
-                *cxf.moment_state_exprs("rate"),
-                qagg.alias("q_sketch"),
-                F.first("day").alias("day"),
-            )
-        derived = cxf.moments_from_state()
-        for name, col in derived.items():
-            state = state.withColumn(name, col)
-        state = (
-            state.withColumn("median", F.col("q_sketch")[2])
-            .withColumn("q05", F.col("q_sketch")[0])
-            .withColumn("q25", F.col("q_sketch")[1])
-            .withColumn("q75", F.col("q_sketch")[3])
-            .withColumn("q95", F.col("q_sketch")[4])
-        )
-
-        if not self.kernel_features:
-            return state
-
-        if observed is None:
-            slim = bucketed.select(
-                "conv_id",
-                F.unix_timestamp("minute_ts").alias("t"),
-                F.col("rate").cast("double").alias("rate"),
-            )
-            regen = False
-        else:
-            slim = self._observed_slim(observed).withColumnRenamed("v", "rate")
-            regen = True
-        bucket_seconds = {"hour": 3600, "day": 86400}[trunc]
-        kf = ops_features.kernel_features_epoch_bucketed(
-            slim,
-            bucket_seconds=bucket_seconds,
-            mode=self.feature_mode,
-            regenerate_dense=regen,
-        ).withColumn(
-            out_bucket, F.timestamp_seconds(F.col("bucket_epoch"))
-        ).drop("bucket_epoch")
-        return state.join(kf, keys)
-
-    def build_rollup_1h_kernel(self, observed: DataFrame) -> DataFrame:
-        """Fast path: the whole 1h tier (mergeable moment state, exact
-        window quantiles, north-star features) from ONE kernel pass over
-        the observed rows — the dense series never exists Spark-side for
-        this tier (kernel.gapfill regeneration + batched window math).
-
-        Requires feature_mode='core'. Output schema matches the SQL-path
-        tier (moments derived from state by column math)."""
-        slim = self._observed_slim(observed).withColumnRenamed("v", "rate")
-        kf = ops_features.kernel_features_epoch_bucketed(
-            slim,
-            bucket_seconds=3600,
-            mode="core",
-            regenerate_dense=True,
-            with_state=True,
-        )
-        tier = kf.withColumn(
-            "hour_ts", F.timestamp_seconds(F.col("bucket_epoch"))
-        ).drop("bucket_epoch")
-        derived = cxf.moments_from_state()
-        for name, col in derived.items():
-            tier = tier.withColumn(name, col)
-        return tier.withColumn("day", F.to_date("hour_ts"))
-
     def build_rollup_tiers_kernel(self, observed: DataFrame) -> DataFrame:
         """BOTH window tiers (1h + 1d) — mergeable moment state, exact
         window quantiles, north-star features — from ONE kernel pass
         over the observed rows. The in-kernel dense regeneration happens
         once and both tiers' windows are cut from the same array
-        (operators.features multi-tier mode), so the 1d tier's full
+        (operators.features.kernel_features_epoch_bucketed), so the 1d tier's full
         feature vector costs only its window math — no second shuffle,
         no base re-scan, and no quantile columns silently vanishing at
         the coarsest retention tier (the reference computes the same
@@ -542,11 +382,7 @@ class RollupEngine:
         bucket_epoch) with state + derived moments + features + day."""
         slim = self._observed_slim(observed).withColumnRenamed("v", "rate")
         kf = ops_features.kernel_features_epoch_bucketed(
-            slim,
-            bucket_seconds=(3600, 86400),
-            mode="core",
-            regenerate_dense=True,
-            with_state=True,
+            slim, bucket_seconds=(3600, 86400)
         )
         tier = kf.withColumn(
             "bucket_ts", F.timestamp_seconds(F.col("bucket_epoch"))
@@ -555,40 +391,6 @@ class RollupEngine:
         for name, col in derived.items():
             tier = tier.withColumn(name, col)
         return tier.withColumn("day", F.to_date("bucket_ts"))
-
-    def build_rollup_1h(
-        self, base: DataFrame, observed: DataFrame | None = None
-    ) -> DataFrame:
-        return self._window_tier(base, "hour", "hour_ts", observed=observed)
-
-    def build_rollup_1d_from_1h(self, tier_1h: DataFrame) -> DataFrame:
-        """1d tier from 1h **state sums** — no base re-scan for the
-        moment features (hierarchical re-aggregation, SURVEY.md §4.3).
-
-        This is the SQL-path fallback (and the mergeability
-        demonstration: summed state reproduces direct aggregation
-        bit-for-bit modulo summation order, test_moment_state_merge_exact).
-        It carries moments only; the DEFAULT kernel path instead builds
-        the 1d tier with full parity — exact window quantiles and the
-        north-star features — from the same single kernel pass that
-        produces the 1h tier (build_rollup_tiers_kernel), so no tier
-        loses columns at coarser retention."""
-        keys = ["conv_id", "day"]
-        agg = tier_1h.groupBy(*keys).agg(
-            F.sum("n").alias("n"),
-            F.sum("s1").alias("s1"),
-            F.sum("s2").alias("s2"),
-            F.sum("s3").alias("s3"),
-            F.sum("s4").alias("s4"),
-            F.min("min").alias("min"),
-            F.max("max").alias("max"),
-        )
-        derived = cxf.moments_from_state()
-        for name, col in derived.items():
-            agg = agg.withColumn(name, col)
-        return agg.withColumn(
-            "day_ts", F.col("day").cast("timestamp")
-        )
 
     def build_chunks(
         self, observed: DataFrame, interpolate: str = "linear"
@@ -760,13 +562,10 @@ class RollupEngine:
                 )
                 t = mark("chunks", t)
 
-            # -- 1h + 1d tiers: one shared kernel pass (core mode)
-            # computes both tiers' windows from the same in-kernel dense
-            # series; the SQL path aggregates the dense plan for 1h and
-            # re-sums 1h state for 1d (hierarchical, moments-only — full
-            # 1d quantiles/features are the kernel path's job)
+            # -- 1h + 1d tiers: one shared kernel pass computes both
+            # tiers' windows from the same in-kernel dense series
             need = sorted(set(new_1h) | set(new_1d))
-            if need and self.kernel_features and self.feature_mode == "core":
+            if need:
                 combined = _day_filter(
                     self.build_rollup_tiers_kernel(observed), need
                 ).cache()
@@ -785,26 +584,6 @@ class RollupEngine:
                     .drop("bucket_seconds", "bucket_epoch")
                     .withColumnRenamed("bucket_ts", "day_ts")
                 )
-                tier_1d = (
-                    _day_filter(tier_1d, new_1d) if new_1d
-                    else tier_1d.filter(F.lit(False))
-                )
-            elif need:
-                base = gap_fill_minutes(observed).withColumn(
-                    "day", F.to_date("minute_ts")
-                )
-                tier_1h_all = _day_filter(
-                    self.build_rollup_1h(
-                        base, observed=observed if self.kernel_features else None
-                    ),
-                    need,
-                ).cache()
-                cached = tier_1h_all
-                tier_1h = (
-                    _day_filter(tier_1h_all, new_1h) if new_1h
-                    else tier_1h_all.filter(F.lit(False))
-                )
-                tier_1d = self.build_rollup_1d_from_1h(tier_1h_all)
                 tier_1d = (
                     _day_filter(tier_1d, new_1d) if new_1d
                     else tier_1d.filter(F.lit(False))

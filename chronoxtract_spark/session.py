@@ -119,7 +119,7 @@ def _warm_engine_paths(spark: SparkSession) -> None:
 
     io = tableio.temp_warehouse(spark)
     try:
-        eng = RollupEngine(spark, io, kernel_features=True, compress=True)
+        eng = RollupEngine(spark, io)
         # Size the warm input to the session: every core must see a
         # realistically-sized batch or the first REAL job still pays
         # the worker/off-heap first-touch penalty. Measured at sf1

@@ -51,8 +51,6 @@ def parse_args(argv):
     p.add_argument("--salts", type=int, default=0,
                    help="salt count for mega-thread skew repartition "
                         "(0 = AQE skew handling only)")
-    p.add_argument("--no-kernel-features", action="store_true",
-                   help="skip the applyInPandas feature battery tiers")
     p.add_argument("--no-compress", action="store_true",
                    help="skip the Gorilla chunk stage")
     p.add_argument("--no-resume", action="store_true",
@@ -90,7 +88,6 @@ def main(argv=None) -> int:
         spark,
         io,
         salts=args.salts,
-        kernel_features=not args.no_kernel_features,
         compress=not args.no_compress,
     )
     counts = eng.run(

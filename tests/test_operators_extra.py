@@ -355,7 +355,7 @@ class TestIncremental:
 
         base = synth_transcripts(spark, n_conversations=12, seed=7)
         io = temp_warehouse(spark)
-        eng = RollupEngine(spark, io, kernel_features=False, compress=False)
+        eng = RollupEngine(spark, io, compress=False)
         eng.run(base, source_snapshot="v1")
         before = {
             r.partition_key
@@ -410,7 +410,7 @@ class TestIncremental:
 
         base_rows = turns(1, 0) + turns(2, 10) + turns(3, 20)
         io = temp_warehouse(spark)
-        eng = RollupEngine(spark, io, kernel_features=False, compress=False)
+        eng = RollupEngine(spark, io, compress=False)
         eng.run(transcripts(base_rows), source_snapshot="v1")
 
         def day_2():

@@ -89,11 +89,11 @@ class TestKillResume:
 
         tr = synth_transcripts(spark, n_conversations=10, seed=9)
         io = temp_warehouse(spark)
-        eng = RollupEngine(spark, io, kernel_features=False, compress=False)
+        eng = RollupEngine(spark, io, compress=False)
 
         # full run once to learn expected counts
         io2 = temp_warehouse(spark)
-        eng_ref = RollupEngine(spark, io2, kernel_features=False, compress=False)
+        eng_ref = RollupEngine(spark, io2, compress=False)
         expected = eng_ref.run(tr, source_snapshot="s")
 
         # "crashed" run: commit only the 1m tier + its lineage, then stop

@@ -90,8 +90,7 @@ def test_empty_and_whitespace_docs(spark):
 
 
 # ---------------------------------------------------------------------------
-# t-digest (kernel/tdigest.py + the sketches.py Spark faces + the
-# rollup quantiles="tdigest" mode)
+# t-digest (kernel/tdigest.py + the sketches.py Spark faces)
 
 
 def test_tdigest_singleton_regime_is_hazen():
@@ -186,44 +185,6 @@ def test_tdigest_spark_hierarchy_matches_hazen(spark):
         for col, q in (("q05", 0.05), ("q50", 0.5), ("q95", 0.95)):
             want = float(np.quantile(vals, q, method="hazen"))
             assert r[col] == pytest.approx(want, rel=1e-12), (r["key"], col)
-
-
-def test_rollup_tdigest_quantile_mode(spark):
-    """quantiles='tdigest' swaps the tier sketch without changing the
-    tier shape; estimates stay inside the exact mode's q05..q95 span
-    and the mode is deterministic run-to-run."""
-    from chronoxtract_spark.operators.gapfill import gap_fill_minutes, turn_rate_1m
-    from chronoxtract_spark.plans.rollup import RollupEngine
-    from chronoxtract_spark.sources.tableio import temp_warehouse
-    from chronoxtract_spark.synth import synth_transcripts
-
-    tr = synth_transcripts(spark, 6, seed=3)
-    base = gap_fill_minutes(turn_rate_1m(tr.select("conv_id", "ts"))).withColumn(
-        "day", F.date_format("minute_ts", "yyyy-MM-dd")
-    )
-    io = temp_warehouse(spark)
-    keep = ["conv_id", "hour_ts", "n", "median", "q05", "q95"]
-    ex = {
-        (r["conv_id"], r["hour_ts"]): r
-        for r in RollupEngine(spark, io, quantiles="exact")
-        .build_rollup_1h(base).select(keep).collect()
-    }
-    td_rows = (
-        RollupEngine(spark, io, quantiles="tdigest")
-        .build_rollup_1h(base).select(keep).collect()
-    )
-    assert len(td_rows) == len(ex) > 0
-    for r in td_rows:
-        e = ex[(r["conv_id"], r["hour_ts"])]
-        lo, hi = e["q05"], e["q95"]
-        spread = (hi - lo) or 1e-9
-        assert lo - 1e-9 <= r["median"] <= hi + 1e-9
-        assert abs(r["median"] - e["median"]) <= 0.6 * spread + 1e-9
-    td2 = (
-        RollupEngine(spark, io, quantiles="tdigest")
-        .build_rollup_1h(base).select(keep).collect()
-    )
-    assert sorted(map(tuple, td_rows)) == sorted(map(tuple, td2))
 
 
 # ---------------------------------------------------------------------------

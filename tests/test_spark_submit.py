@@ -82,7 +82,6 @@ def test_submit_py_files_end_to_end(spark, tmp_path):
         "--input", input_dir,
         "--warehouse", warehouse,
         "--snapshot", "v1",
-        "--no-kernel-features",
     )
     assert summary["tiers"]["rollup_1m"] > 0
     assert summary["phase_seconds"].get("write_1m", 0) > 0
@@ -91,6 +90,11 @@ def test_submit_py_files_end_to_end(spark, tmp_path):
     tier = spark.read.parquet(os.path.join(warehouse, "rollup_1m"))
     assert tier.count() == summary["tiers"]["rollup_1m"]
     assert {"conv_id", "day"} <= set(tier.columns)
+    # the coarsest tier carries the full statistical vector, not just
+    # moments
+    tier_1d = spark.read.parquet(os.path.join(warehouse, "rollup_1d"))
+    assert tier_1d.count() == summary["tiers"]["rollup_1d"] > 0
+    assert {"median", "q95", "spectral_entropy"} <= set(tier_1d.columns)
     lineage = spark.read.parquet(os.path.join(warehouse, "lineage"))
     assert lineage.filter("source_snapshot = 'v1'").count() > 0
 
@@ -101,6 +105,6 @@ def test_submit_py_files_end_to_end(spark, tmp_path):
         "--input", input_dir,
         "--warehouse", warehouse,
         "--snapshot", "v1",
-        "--no-kernel-features",
     )
     assert resumed["tiers"]["rollup_1m"] == 0
+    assert resumed["tiers"]["rollup_1d"] == 0

@@ -335,7 +335,7 @@ class TestStreamingChunks:
             ).parquet(src)
 
         io = temp_warehouse(spark)
-        eng = RollupEngine(spark, io, kernel_features=False, compress=True)
+        eng = RollupEngine(spark, io)
         stream = (
             spark.readStream.schema(SCHEMA)
             .option("maxFilesPerTrigger", 1)
@@ -357,7 +357,7 @@ class TestStreamingChunks:
 
         got = canon(io.read("chunks_1m_stream"))
         io2 = temp_warehouse(spark)
-        eng2 = RollupEngine(spark, io2, kernel_features=False, compress=True)
+        eng2 = RollupEngine(spark, io2)
         want = canon(eng2.build_chunks(eng2.build_observed(tr)))
         assert got == want
         assert len(got) > 6  # multi-day chunks actually exercised

@@ -79,14 +79,14 @@ import chronoxtract_spark.sources.tableio as tio
 # reported alongside for full disclosure.
 t_w = time.time()
 warm_io = tio.ParquetBackend(spark, f"/dev/shm/cx_warm_{{cpus}}_{{os.getpid()}}")
-warm_eng = RollupEngine(spark, warm_io, kernel_features=True, compress=True)
+warm_eng = RollupEngine(spark, warm_io)
 warm_eng.run(synth_transcripts(spark, 8, seed=1, min_turns=64, max_turns=256),
              source_snapshot="warm", resume=False)
 shutil.rmtree(warm_io.root, ignore_errors=True)
 warm_sec = time.time() - t_w
 
 io = tio.ParquetBackend(spark, f"/dev/shm/cx_scale_{{cpus}}_{{os.getpid()}}")
-eng = RollupEngine(spark, io, kernel_features=True, compress=True)
+eng = RollupEngine(spark, io)
 t0 = time.time()
 counts = eng.run(ev, source_snapshot="scale", resume=False)
 dt = time.time() - t0
@@ -619,16 +619,16 @@ rate column 2.8x), fan-out granule count 32->64 (no effect), segment-
 level vs conversation-level fan-out hashing (conversation locality
 WINS by 36% — the partitioned writer needs it), heap-per-core parity
 (a 96g heap 8c leg is no faster than 48g — GC is not the tax), raw
-memory bandwidth (tools/membw_probe.py: STREAM-triad aggregate scales
+memory bandwidth (the since-retired tools/membw_probe.py: STREAM-triad aggregate scales
 3.68x from 2 to 8 pinned workers — ceiling efficiency 0.92, so
 bandwidth is not the wall), and real executor JVMs via local-cluster
-(tools/executor_scale_bench.py + BENCH/EXECUTOR_SCALING.md: the
+(the since-retired tools/executor_scale_bench.py + BENCH/EXECUTOR_SCALING.md: the
 stand-in's own one-box artifacts dominate, 4-exec write_1m 135.8 s vs
 local[8]'s 51-60 s). What remains is the one-box substitution itself:
 a shared OS image, one kernel page-cache/zeroing path, one shared
 last-level cache, and one hypervisor tenancy serving both "cluster
 sizes" — costs a real 4N-executor cluster divides by 4 but a
-4N-thread box does not. tools/membw_probe.py separates the two
+4N-thread box does not. The same probe separated the two
 memory regimes within a single window: streaming triad vs random
 8-byte gathers over a 512 MiB table (the dictionary-hash access
 pattern of the parquet encode). Measured in the same window, gather
