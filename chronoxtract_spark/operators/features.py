@@ -20,7 +20,6 @@ import math
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from chronoxtract_spark import functions as cxf
 from chronoxtract_spark.kernel import (
@@ -391,7 +390,7 @@ def core_features_batch(
 
 
 #: mergeable raw-moment state + exact window quantiles, emitted by the
-#: same kernel pass as the core features (kernel_features_epoch_bucketed) —
+#: same kernel pass as the core features (tier_windows) —
 #: mirrors functions.moment_state_exprs (src/stats/mod.rs:25-43) and the
 #: reference's interpolated quantiles (src/stats/mod.rs:98-111)
 WINDOW_STATE_FIELDS = [
@@ -487,114 +486,44 @@ def _gather_windows(x: np.ndarray, starts: np.ndarray, length: int) -> np.ndarra
     return mat
 
 
-def kernel_features_epoch_bucketed(
-    df: DataFrame,
-    bucket_seconds: tuple[int, ...],
-    conv_col: str = "conv_id",
-    t_col: str = "t",
-    value_col: str = "rate",
-) -> DataFrame:
-    """Window state + core features for every tier width in
-    ``bucket_seconds`` (e.g. ``(3600, 86400)``) over slim *observed*
-    ``(conv_id, epoch_seconds, value)`` rows: integer bucketing and a
-    single int64 argsort inside the kernel, zero datetime objects across
-    the Arrow boundary.
-
-    The dense gap-filled series is rebuilt in-kernel
-    (kernel.gapfill.dense_from_observed) so the shuffle never carries
-    the ~1000x dense fan-out, and every tier's windows are cut from that
-    SAME series in ONE grouped-map pass — the marginal cost of a coarser
-    tier is just its window math, not a second shuffle + dense
-    regeneration. One output row per (conv, ``bucket_seconds`` (long),
-    ``bucket_epoch`` (long)) window carries WINDOW_STATE_FIELDS +
-    CORE_FEATURE_FIELDS.
-    """
-    from chronoxtract_spark.kernel import gapfill as k_gapfill
-
-    tiers = tuple(int(b) for b in bucket_seconds)
+def tier_windows(
+    x: np.ndarray,
+    t: np.ndarray,
+    conv_idx: np.ndarray,
+    conv_vals: np.ndarray,
+    width: int,
+) -> pd.DataFrame:
+    """One tier's windows over concatenated per-conversation dense
+    series: window boundaries are (conversation, ``width``-second epoch
+    bucket) changes. One row per window — ``conv_id``,
+    ``bucket_epoch`` (long), WINDOW_STATE_FIELDS + CORE_FEATURE_FIELDS —
+    in series order. Same-length windows across every conversation
+    batch into one vectorized call (all window math is row-wise, so
+    batch composition cannot change a result bit)."""
     fields = WINDOW_STATE_FIELDS + CORE_FEATURE_FIELDS
-    m = dict(df.dtypes)
-    schema = (
-        f"{conv_col} {m[conv_col]}, bucket_seconds long, bucket_epoch long, "
-        + ", ".join(f"{c} {t}" for c, t in fields)
-    )
-
-    def windows_for(
-        x: np.ndarray, t: np.ndarray, conv_idx: np.ndarray,
-        conv_vals: np.ndarray, width: int,
-    ) -> pd.DataFrame:
-        """One tier's windows over the whole BUCKET: window boundaries
-        are (conversation, epoch-bucket) changes over the concatenated
-        per-conv series; same-length windows across every conversation
-        batch into one vectorized call (all window math is row-wise, so
-        batch composition cannot change a result bit)."""
-        bucket = (t // width) * width
-        brk = (bucket[1:] != bucket[:-1]) | (conv_idx[1:] != conv_idx[:-1])
-        change = np.flatnonzero(brk) + 1
-        starts = np.concatenate(([0], change))
-        ends = np.concatenate((change, [len(x)]))
-        lengths = ends - starts
-        n_win = len(starts)
-        cols = {
-            c: np.empty(n_win, dtype=np.int64 if ft == "long" else np.float64)
-            for c, ft in fields
-        }
-        for length in np.unique(lengths):
-            sel = np.flatnonzero(lengths == length)
-            mat = _gather_windows(x, starts[sel], int(length))
-            # one min/max reduction serves both the histogram scaling
-            # and the state columns (identical values)
-            mnk = mat.min(axis=1, keepdims=True)
-            mxk = mat.max(axis=1, keepdims=True)
-            feats = core_features_batch(mat, mn=mnk, mx=mxk)
-            feats.update(
-                window_state_batch(mat, mn=mnk.ravel(), mx=mxk.ravel())
-            )
-            for c, _ in fields:
-                cols[c][sel] = feats[c]
-        out = pd.DataFrame(cols)
-        out.insert(0, "bucket_epoch", bucket[starts])
-        out.insert(0, conv_col, conv_vals[conv_idx[starts]])
-        return out
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        conv_raw = pdf[conv_col].to_numpy()
-        t_raw = pdf[t_col].to_numpy(np.int64)
-        x_raw = pdf[value_col].to_numpy(np.float64)
-        conv_vals, codes = np.unique(conv_raw, return_inverse=True)
-        order = np.lexsort((t_raw, codes))  # stable, like the old argsort
-        codes, t_raw, x_raw = codes[order], t_raw[order], x_raw[order]
-        cchange = np.flatnonzero(codes[1:] != codes[:-1]) + 1
-        cstarts = np.concatenate(([0], cchange))
-        cends = np.concatenate((cchange, [len(codes)]))
-        ts, xs, cidx = [], [], []
-        for s, e in zip(cstarts, cends):
-            td, xd, _turns, _obs = k_gapfill.dense_from_observed(
-                t_raw[s:e], x_raw[s:e]
-            )
-            ts.append(td)
-            xs.append(xd)
-            cidx.append(np.full(td.size, codes[s], dtype=np.int64))
-        t = np.concatenate(ts) if ts else t_raw
-        x = np.concatenate(xs) if xs else x_raw
-        conv_idx = np.concatenate(cidx) if cidx else codes
-        frames = []
-        for width in tiers:
-            f = windows_for(x, t, conv_idx, conv_vals, width)
-            f.insert(1, "bucket_seconds", np.int64(width))
-            frames.append(f)
-        return pd.concat(frames, ignore_index=True)
-
-    # BUCKETED grouping: one Arrow group per hash bucket of
-    # conversations, not one per conversation — at many conversations
-    # the per-group pandas/DataFrame machinery costs ~2x the window
-    # math (measured: sf1.0 two-tier pass 14.3 s against ~5 s of kernel
-    # CPU), and same-length windows batch across the whole bucket.
-    # 8x-cores buckets smooth hash-assignment skew; the explicit
-    # repartition keeps the ~1000x in-kernel dense fan-out from being
-    # AQE-coalesced into a handful of tasks.
-    par = max(df.sparkSession.sparkContext.defaultParallelism, 8)
-    n_bkt = par * 8
-    df = df.withColumn("_bkt", F.pmod(F.xxhash64(conv_col), F.lit(n_bkt)))
-    df = df.repartition(max(par * 2, 16), "_bkt")
-    return df.groupBy("_bkt").applyInPandas(fn, schema=schema).drop("_bkt")
+    bucket = (t // width) * width
+    brk = (bucket[1:] != bucket[:-1]) | (conv_idx[1:] != conv_idx[:-1])
+    change = np.flatnonzero(brk) + 1
+    starts = np.concatenate(([0], change))
+    ends = np.concatenate((change, [len(x)]))
+    lengths = ends - starts
+    n_win = len(starts)
+    cols = {
+        c: np.empty(n_win, dtype=np.int64 if ft == "long" else np.float64)
+        for c, ft in fields
+    }
+    for length in np.unique(lengths):
+        sel = np.flatnonzero(lengths == length)
+        mat = _gather_windows(x, starts[sel], int(length))
+        # one min/max reduction serves both the histogram scaling
+        # and the state columns (identical values)
+        mnk = mat.min(axis=1, keepdims=True)
+        mxk = mat.max(axis=1, keepdims=True)
+        feats = core_features_batch(mat, mn=mnk, mx=mxk)
+        feats.update(window_state_batch(mat, mn=mnk.ravel(), mx=mxk.ravel()))
+        for c, _ in fields:
+            cols[c][sel] = feats[c]
+    out = pd.DataFrame(cols)
+    out.insert(0, "bucket_epoch", bucket[starts])
+    out.insert(0, "conv_id", conv_vals[conv_idx[starts]])
+    return out

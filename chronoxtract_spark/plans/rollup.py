@@ -93,6 +93,79 @@ CHUNK_SCHEMA = (
     "ts_bytes binary, val_bytes binary, checksum long, raw_size long, "
     "enc_size long"
 )
+CHUNK_COLS = [f.split()[0] for f in CHUNK_SCHEMA.split(", ")]
+#: the chunk fields a 1d row of the fused tier pass carries; the chunk's
+#: day and ``n`` (the day's point count) are the window's own
+TIER_CHUNK_FIELDS = [
+    tuple(f.split())
+    for f in CHUNK_SCHEMA.split(", ")
+    if f.split()[0] not in ("conv_id", "day", "n")
+]
+TIER_CHUNK_COLS = [c for c, _ in TIER_CHUNK_FIELDS]
+
+
+def _dense_per_conv(pdf: pd.DataFrame, interpolate: str = "linear"):
+    """Conversation values and each conversation's dense gap-filled
+    series (kernel.gapfill.dense_from_observed, bit-identical to the 1m
+    tier) from one group of slim observed ``(conv_id, t, v)`` rows:
+    ``(conv_vals, [(code, t_dense, v_dense), ...])`` in ``conv_vals``
+    order."""
+    conv_vals, codes = np.unique(pdf["conv_id"].to_numpy(), return_inverse=True)
+    t_raw = pdf["t"].to_numpy(np.int64)
+    v_raw = pdf["v"].to_numpy(np.float64)
+    order = np.lexsort((t_raw, codes))  # stable: ties keep input order
+    codes, t_raw, v_raw = codes[order], t_raw[order], v_raw[order]
+    cchange = np.flatnonzero(codes[1:] != codes[:-1]) + 1
+    cstarts = np.concatenate(([0], cchange))
+    cends = np.concatenate((cchange, [len(codes)]))
+    series = []
+    for s, e in zip(cstarts, cends):
+        t, v, _turns, _obs = k_gapfill.dense_from_observed(
+            t_raw[s:e], v_raw[s:e], interpolate=interpolate
+        )
+        series.append((codes[s], t, v))
+    return conv_vals, series
+
+
+def _day_chunks(conv: str, t: np.ndarray, v: np.ndarray) -> list[tuple]:
+    """One conversation's dense series split at UTC day boundaries and
+    Gorilla-encoded per day (chronoxtract_spark.compression): one
+    ``(day, chunk_id, t0, n, ts_bytes, val_bytes, checksum, raw_size,
+    enc_size)`` tuple per day, in day order — the only chunk encoder,
+    shared by build_chunks and the fused tier pass."""
+    day_idx = t // 86400
+    change = np.flatnonzero(day_idx[1:] != day_idx[:-1]) + 1
+    starts = np.concatenate(([0], change))
+    ends = np.concatenate((change, [len(t)]))
+    out = []
+    for s, e in zip(starts, ends):
+        ch = cxc.encode_chunk(t[s:e], v[s:e])
+        day = str(np.datetime64(int(day_idx[s]) * 86400, "s"))[:10]
+        out.append((
+            day, f"{conv}/{day}", ch["t0"], ch["n"], ch["ts_bytes"],
+            ch["val_bytes"], ch["checksum"], ch["raw_size"], ch["enc_size"],
+        ))
+    return out
+
+
+def _bucketed_map(slim: DataFrame, fn, schema: str) -> DataFrame:
+    """``fn`` over one Arrow group per hash bucket of conversations, not
+    one per conversation: at many conversations the per-group pandas
+    machinery rivals the kernel math, and same-length windows batch
+    across the whole bucket. The grouped map runs in the session's
+    ``defaultParallelism`` partitions — each Python task has a fixed
+    cost (DESIGN.md, "Python-worker cost per task"), so more tasks than
+    cores only add it — with 8 buckets per partition to spread
+    Zipf-skewed conversations. The explicit repartition also keeps AQE
+    from coalescing the tiny observed input into one task while the
+    kernel regenerates the ~1000x dense series."""
+    par = slim.sparkSession.sparkContext.defaultParallelism
+    return (
+        slim.withColumn("_bkt", F.pmod(F.xxhash64("conv_id"), F.lit(par * 8)))
+        .repartition(par, "_bkt")
+        .groupBy("_bkt")
+        .applyInPandas(fn, schema=schema)
+    )
 
 
 class RollupEngine:
@@ -126,22 +199,23 @@ class RollupEngine:
 
     # -- lineage ------------------------------------------------------------
 
-    def committed_days(self, tier: str, source_snapshot: str) -> set[str]:
-        """Day partitions already committed for this tier against this
-        exact source snapshot."""
+    def committed_days(self, source_snapshot: str) -> dict[str, set[str]]:
+        """Table → day partitions already committed against this exact
+        source snapshot, for every tier and the chunk table, from ONE
+        scan of the lineage table."""
         if not self.io.exists(LINEAGE_TABLE):
-            return set()
+            return {}
         rows = (
             self.io.read(LINEAGE_TABLE)
-            .filter(
-                (F.col("tier") == tier)
-                & (F.col("source_snapshot") == source_snapshot)
-            )
-            .select("partition_key")
+            .filter(F.col("source_snapshot") == source_snapshot)
+            .select("tier", "partition_key")
             .distinct()
             .collect()
         )
-        return {r[0] for r in rows}
+        days: dict[str, set[str]] = {}
+        for tier, day in rows:
+            days.setdefault(tier, set()).add(day)
+        return days
 
     def _write_with_lineage(
         self,
@@ -369,22 +443,64 @@ class RollupEngine:
 
     def build_rollup_tiers_kernel(self, observed: DataFrame) -> DataFrame:
         """BOTH window tiers (1h + 1d) — mergeable moment state, exact
-        window quantiles, north-star features — from ONE kernel pass
-        over the observed rows. The in-kernel dense regeneration happens
-        once and both tiers' windows are cut from the same array
-        (operators.features.kernel_features_epoch_bucketed), so the 1d tier's full
-        feature vector costs only its window math — no second shuffle,
-        no base re-scan, and no quantile columns silently vanishing at
-        the coarsest retention tier (the reference computes the same
-        statistics at every tier, src/stats/mod.rs:81-114).
+        window quantiles, north-star features — and the Gorilla chunks,
+        from ONE grouped-map pass over the observed rows. Each
+        conversation's dense series is regenerated in-kernel once; both
+        tiers' windows are cut from it (operators.features.tier_windows)
+        and each day of it is encoded once (the encoder build_chunks
+        uses), so the 1d tier's full feature vector costs only its
+        window math and the chunks cost only their encoding — no second
+        shuffle, no second dense regeneration, and no quantile columns
+        silently vanishing at the coarsest retention tier (the
+        reference computes the same statistics at every tier,
+        src/stats/mod.rs:81-114).
 
         Output: one row per (conv_id, bucket_seconds∈{3600,86400},
-        bucket_epoch) with state + derived moments + features + day."""
-        slim = self._observed_slim(observed).withColumnRenamed("v", "rate")
-        kf = ops_features.kernel_features_epoch_bucketed(
-            slim, bucket_seconds=(3600, 86400)
+        bucket_epoch) with state + derived moments + features + day.
+        A 1d window and a chunk share their (conv_id, day) key, so each
+        1d row also carries its day's chunk (TIER_CHUNK_FIELDS; the
+        chunk's point count is the row's ``n``); on 1h rows those
+        columns are null."""
+        slim = self._observed_slim(observed)
+        fields = ops_features.WINDOW_STATE_FIELDS + ops_features.CORE_FEATURE_FIELDS
+        schema = ", ".join(
+            [f"conv_id {dict(slim.dtypes)['conv_id']}"]
+            + ["bucket_seconds long, bucket_epoch long"]
+            + [f"{c} {t}" for c, t in fields + TIER_CHUNK_FIELDS]
         )
-        tier = kf.withColumn(
+
+        def fused(pdf: pd.DataFrame) -> pd.DataFrame:
+            conv_vals, series = _dense_per_conv(pdf)
+            t = np.concatenate([s[1] for s in series])
+            x = np.concatenate([s[2] for s in series])
+            conv_idx = np.concatenate(
+                [np.full(s[1].size, s[0], dtype=np.int64) for s in series]
+            )
+            hours, days = (
+                ops_features.tier_windows(x, t, conv_idx, conv_vals, width)
+                for width in (3600, 86400)
+            )
+            hours.insert(1, "bucket_seconds", np.int64(3600))
+            days.insert(1, "bucket_seconds", np.int64(86400))
+            # 1d windows come out in (conversation, day) order, the order
+            # _day_chunks emits each conversation's days in
+            chunks = zip(*(
+                ch
+                for code, tc, vc in series
+                for ch in _day_chunks(conv_vals[code], tc, vc)
+            ))
+            for c, vals in zip(CHUNK_COLS[1:], chunks):
+                if c in TIER_CHUNK_COLS:
+                    days[c] = vals
+            for c, ft in TIER_CHUNK_FIELDS:
+                hours[c] = pd.Series(
+                    None, index=hours.index,
+                    dtype="Int64" if ft == "long" else object,
+                )
+            return pd.concat([hours, days], ignore_index=True)
+
+        tier = _bucketed_map(slim, fused, schema)
+        tier = tier.withColumn(
             "bucket_ts", F.timestamp_seconds(F.col("bucket_epoch"))
         )
         derived = cxf.moments_from_state()
@@ -392,12 +508,29 @@ class RollupEngine:
             tier = tier.withColumn(name, col)
         return tier.withColumn("day", F.to_date("bucket_ts"))
 
+    @staticmethod
+    def chunks_from_tiers(tiers: DataFrame) -> DataFrame:
+        """The Gorilla chunk table (CHUNK_SCHEMA) that the 1d rows of
+        build_rollup_tiers_kernel carry — equal to ``build_chunks`` over
+        the same observed rows. The chunk day is the UTC day of the
+        window, the day build_chunks encodes under."""
+        return tiers.filter(F.col("bucket_seconds") == 86400).select(
+            "conv_id",
+            F.expr(
+                "cast(date_from_unix_date(cast(bucket_epoch div 86400 as int))"
+                " as string)"
+            ).alias("day"),
+            *CHUNK_COLS[2:],
+        )
+
     def build_chunks(
         self, observed: DataFrame, interpolate: str = "linear"
     ) -> DataFrame:
         """Gorilla-compressed chunk structs per (conv_id, day): the
         vectorized Arrow UDF emitting binary-packed chunks
-        (chronoxtract_spark.compression).
+        (chronoxtract_spark.compression). The standalone chunk operator;
+        RollupEngine.run takes the same chunks from its fused tier pass
+        (build_rollup_tiers_kernel) instead.
 
         Consumes the **observed** per-minute rows only and regenerates
         the dense gap-filled series inside the kernel
@@ -412,63 +545,15 @@ class RollupEngine:
         dense input makes every minute an observation)."""
 
         def encode(pdf: pd.DataFrame) -> pd.DataFrame:
-            conv_raw = pdf["conv_id"].to_numpy()
-            t_raw = pdf["t"].to_numpy(np.int64)
-            v_raw = pdf["v"].to_numpy(np.float64)
-            conv_vals, codes = np.unique(conv_raw, return_inverse=True)
-            order = np.lexsort((t_raw, codes))  # stable, like the old
-            codes, t_raw, v_raw = codes[order], t_raw[order], v_raw[order]
-            cchange = np.flatnonzero(codes[1:] != codes[:-1]) + 1
-            cstarts = np.concatenate(([0], cchange))
-            cends = np.concatenate((cchange, [len(codes)]))
-            cols: dict[str, list] = {
-                k: []
-                for k in (
-                    "conv_id", "day", "chunk_id", "t0", "n", "ts_bytes",
-                    "val_bytes", "checksum", "raw_size", "enc_size",
-                )
-            }
-            for cs, ce in zip(cstarts, cends):
-                conv = conv_vals[codes[cs]]
-                t, v, _turns, _obs = k_gapfill.dense_from_observed(
-                    t_raw[cs:ce], v_raw[cs:ce], interpolate=interpolate
-                )
-                day_idx = t // 86400
-                change = np.flatnonzero(day_idx[1:] != day_idx[:-1]) + 1
-                starts = np.concatenate(([0], change))
-                ends = np.concatenate((change, [len(t)]))
-                for s, e in zip(starts, ends):
-                    ch = cxc.encode_chunk(t[s:e], v[s:e])
-                    day = str(np.datetime64(int(day_idx[s]) * 86400, "s"))[:10]
-                    cols["conv_id"].append(conv)
-                    cols["day"].append(day)
-                    cols["chunk_id"].append(f"{conv}/{day}")
-                    cols["t0"].append(ch["t0"])
-                    cols["n"].append(ch["n"])
-                    cols["ts_bytes"].append(ch["ts_bytes"])
-                    cols["val_bytes"].append(ch["val_bytes"])
-                    cols["checksum"].append(ch["checksum"])
-                    cols["raw_size"].append(ch["raw_size"])
-                    cols["enc_size"].append(ch["enc_size"])
-            return pd.DataFrame(cols)
+            conv_vals, series = _dense_per_conv(pdf, interpolate)
+            rows = [
+                (conv_vals[code], *ch)
+                for code, t, v in series
+                for ch in _day_chunks(conv_vals[code], t, v)
+            ]
+            return pd.DataFrame(rows, columns=CHUNK_COLS)
 
-        slim = self._observed_slim(observed)
-        # BUCKETED grouping (one Arrow group per conversation hash
-        # bucket): at many conversations the per-group pandas frame
-        # machinery rivals the encode cost. Parallelism stays pinned —
-        # the tiny observed input would otherwise be AQE-coalesced into
-        # one task while the kernel regenerates the ~1000x dense
-        # series; 8x-cores buckets keep Zipf-skewed conversations from
-        # straggling a coarse granule.
-        par = max(slim.sparkSession.sparkContext.defaultParallelism, 8)
-        n_bkt = par * 8
-        slim = slim.withColumn(
-            "_bkt", F.pmod(F.xxhash64("conv_id"), F.lit(n_bkt))
-        ).repartition(max(par * 2, 32), "_bkt")
-        return (
-            slim.groupBy("_bkt")
-            .applyInPandas(encode, schema=CHUNK_SCHEMA)
-        )
+        return _bucketed_map(self._observed_slim(observed), encode, CHUNK_SCHEMA)
 
     # -- orchestration --------------------------------------------------------
 
@@ -486,13 +571,16 @@ class RollupEngine:
         run is replaced, never duplicated.
 
         Action economy (the thing the scaling rule actually measures):
-        each tier is ONE Spark action — the partitioned write — whose
+        each table is ONE Spark action — the partitioned write — whose
         per-day lineage metrics ride the same pass via ``df.observe``
         (``_write_with_lineage``); nothing is counted, checksummed, or
-        read back in a separate job. Per run that is one action for the
-        dense 1m tier, one for the Gorilla chunks, one that also
-        materializes the shared two-tier kernel cache (1h), and one for
-        1d, plus the tiny planning collect.
+        read back in a separate job. The observed rows feed ONE Python
+        pass (build_rollup_tiers_kernel), which regenerates each
+        conversation's dense series once and cuts the 1h and 1d windows
+        and the Gorilla chunks from it; its output is cached once. Per
+        run that is one action for the dense 1m tier, one for the
+        chunks (which materializes the kernel cache), one each for 1h
+        and 1d, plus one lineage read and the tiny planning collect.
         """
         timings: dict[str, float] = {}
 
@@ -507,14 +595,14 @@ class RollupEngine:
         try:
             counts: dict[str, int] = {}
 
-            skips = {
-                tier: (self.committed_days(tier, source_snapshot) if resume else set())
-                for tier in TIERS
-            }
+            skips = self.committed_days(source_snapshot) if resume else {}
             all_days = self._candidate_days(observed)  # materializes the cache
-            new_1m = [d for d in all_days if d not in skips["rollup_1m"]]
-            new_1h = [d for d in all_days if d not in skips["rollup_1h"]]
-            new_1d = [d for d in all_days if d not in skips["rollup_1d"]]
+            new = {
+                table: [d for d in all_days if d not in skips.get(table, ())]
+                for table in TIERS + (CHUNK_TABLE,)
+            }
+            new_1m, new_1h, new_1d = (new[name] for name in TIERS)
+            new_chunks = new[CHUNK_TABLE] if self.compress else []
             t = mark("plan_and_skip", t)
 
             def _day_filter(df, new_days, col="day"):
@@ -553,62 +641,40 @@ class RollupEngine:
                 counts["rollup_1m"] = 0
             t = mark("write_1m", t)
 
-            if new_1m and self.compress:
-                chunks = _day_filter(self.build_chunks(observed), new_1m)
-                self._write_with_lineage(
-                    chunks, CHUNK_TABLE, new_1m, source_snapshot,
-                    day_repartition=True,
-                    observe_day_cap=MAX_OBSERVE_DAYS_SMALL,
-                )
-                t = mark("chunks", t)
-
-            # -- 1h + 1d tiers: one shared kernel pass computes both
-            # tiers' windows from the same in-kernel dense series
-            need = sorted(set(new_1h) | set(new_1d))
+            # -- chunks, 1h and 1d: one cached kernel pass; each table
+            # resumes from its own lineage, so a crash between two of
+            # these commits re-does only the missing table
+            need = sorted(set(new_chunks) | set(new_1h) | set(new_1d))
             if need:
-                combined = _day_filter(
+                cached = _day_filter(
                     self.build_rollup_tiers_kernel(observed), need
                 ).cache()
-                cached = combined
-                tier_1h = (
-                    combined.filter(F.col("bucket_seconds") == 3600)
-                    .drop("bucket_seconds", "bucket_epoch")
-                    .withColumnRenamed("bucket_ts", "hour_ts")
-                )
-                tier_1h = (
-                    _day_filter(tier_1h, new_1h) if new_1h
-                    else tier_1h.filter(F.lit(False))
-                )
-                tier_1d = (
-                    combined.filter(F.col("bucket_seconds") == 86400)
-                    .drop("bucket_seconds", "bucket_epoch")
-                    .withColumnRenamed("bucket_ts", "day_ts")
-                )
-                tier_1d = (
-                    _day_filter(tier_1d, new_1d) if new_1d
-                    else tier_1d.filter(F.lit(False))
-                )
-            else:
-                tier_1h = tier_1d = None
 
-            counts["rollup_1h"] = (
-                self._write_with_lineage(
-                    tier_1h, "rollup_1h", new_1h, source_snapshot,
+            def commit_small(df, table, days):
+                return self._write_with_lineage(
+                    _day_filter(df, days), table, days, source_snapshot,
                     day_repartition=True,
                     observe_day_cap=MAX_OBSERVE_DAYS_SMALL,
                 )
-                if tier_1h is not None and new_1h
-                else 0
+
+            def tier(width, ts_name):
+                return (
+                    cached.filter(F.col("bucket_seconds") == width)
+                    .drop("bucket_seconds", "bucket_epoch", *TIER_CHUNK_COLS)
+                    .withColumnRenamed("bucket_ts", ts_name)
+                )
+
+            if new_chunks:
+                commit_small(self.chunks_from_tiers(cached), CHUNK_TABLE, new_chunks)
+                t = mark("chunks", t)
+            counts["rollup_1h"] = (
+                commit_small(tier(3600, "hour_ts"), "rollup_1h", new_1h)
+                if new_1h else 0
             )
             t = mark("write_1h", t)
             counts["rollup_1d"] = (
-                self._write_with_lineage(
-                    tier_1d, "rollup_1d", new_1d, source_snapshot,
-                    day_repartition=True,
-                    observe_day_cap=MAX_OBSERVE_DAYS_SMALL,
-                )
-                if tier_1d is not None and new_1d
-                else 0
+                commit_small(tier(86400, "day_ts"), "rollup_1d", new_1d)
+                if new_1d else 0
             )
             t = mark("write_1d", t)
         finally:

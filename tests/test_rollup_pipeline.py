@@ -407,3 +407,124 @@ class TestRollupPipeline:
         # no sidecar exists yet — nothing to answer an empty read with
         io2.overwrite_partitions(empty, "t2", ["day"])
         shutil.rmtree(root, ignore_errors=True)
+
+
+def _canon_chunks(df):
+    """(conv_id, day) → every chunk column, payloads as bytes."""
+    return {
+        (r["conv_id"], str(r["day"])): (
+            r["chunk_id"], r["t0"], r["n"], bytes(r["ts_bytes"]),
+            bytes(r["val_bytes"]), r["checksum"], r["raw_size"],
+            r["enc_size"],
+        )
+        for r in df.collect()
+    }
+
+
+def _lineage(io, snapshot):
+    return {
+        (r.tier, r.partition_key): (r.row_count, r.checksum)
+        for r in io.read("lineage")
+        .filter(F.col("source_snapshot") == snapshot)
+        .collect()
+    }
+
+
+class TestFusedChunks:
+    """run() takes the Gorilla chunks from its one kernel pass, carried
+    on the 1d rows; build_chunks stays the standalone operator."""
+
+    def test_run_chunks_equal_build_chunks(self, spark):
+        """The chunks_1m table run() writes is, byte for byte, the table
+        build_chunks gives over the same observed rows — across a
+        conversation spanning three days (one of them all gap-fill), a
+        one-turn conversation, and a day holding a single point — with
+        exactly one chunk per 1d row."""
+        import shutil
+
+        crafted = spark.createDataFrame(
+            [
+                ("a", "2026-01-01 10:00:00"), ("a", "2026-01-01 10:05:30"),
+                ("a", "2026-01-03 12:00:00"),
+                ("b", "2026-01-02 08:00:00"),
+                ("c", "2026-01-01 23:59:10"), ("c", "2026-01-01 23:59:50"),
+                ("c", "2026-01-02 00:00:20"),
+            ],
+            "conv_id string, ts string",
+        ).withColumn("ts", F.to_timestamp("ts"))
+        tr = crafted.unionByName(
+            synth_transcripts(
+                spark, n_conversations=6, seed=3, min_turns=200, max_turns=300
+            ).select("conv_id", "ts")
+        )
+        io = temp_warehouse(spark)
+        eng = RollupEngine(spark, io)
+        counts = eng.run(tr, source_snapshot="fused")
+
+        got = _canon_chunks(io.read("chunks_1m"))
+        assert got == _canon_chunks(eng.build_chunks(eng.build_observed(tr)))
+        assert {k for k in got if k[0] == "a"} == {
+            ("a", "2026-01-01"), ("a", "2026-01-02"), ("a", "2026-01-03")
+        }
+        assert got[("b", "2026-01-02")][2] == 1
+        assert got[("c", "2026-01-02")][2] == 1
+
+        day_n = {
+            (r.conv_id, str(r.day)): r.n
+            for r in io.read("rollup_1d").select("conv_id", "day", "n").collect()
+        }
+        assert counts["rollup_1d"] == len(day_n) == len(got)
+        assert day_n == {k: v[2] for k, v in got.items()}
+        shutil.rmtree(io.root, ignore_errors=True)
+
+    def test_chunk_write_crash_then_resume(self, spark, monkeypatch):
+        """A crash after the 1m commit, inside the chunk write (files
+        written, lineage not), must not lose those days' chunks: the
+        resumed run rebuilds them from the chunk table's own lineage,
+        reads the lineage table once, and ends with the chunk rows and
+        every lineage checksum of a clean run."""
+        import shutil
+
+        tr = synth_transcripts(spark, n_conversations=10, seed=9)
+        clean_io = temp_warehouse(spark)
+        RollupEngine(spark, clean_io).run(tr, source_snapshot="s")
+
+        io = temp_warehouse(spark)
+        eng = RollupEngine(spark, io)
+        write = io.overwrite_partitions
+
+        def crash(df, table, partition_by):
+            write(df, table, partition_by)
+            if table == "chunks_1m":
+                raise RuntimeError("injected crash in the chunk commit")
+
+        monkeypatch.setattr(io, "overwrite_partitions", crash)
+        persistent = spark.sparkContext._jsc.getPersistentRDDs
+        before = persistent().size()
+        with pytest.raises(RuntimeError, match="injected"):
+            eng.run(tr, source_snapshot="s")
+        assert persistent().size() == before
+        assert set(_lineage(io, "s")) == {
+            k for k in _lineage(clean_io, "s") if k[0] == "rollup_1m"
+        }
+        monkeypatch.undo()
+
+        read = io.read
+        reads = []
+
+        def counting_read(table):
+            reads.append(table)
+            return read(table)
+
+        monkeypatch.setattr(io, "read", counting_read)
+        counts = eng.run(tr, source_snapshot="s")
+        monkeypatch.undo()
+        assert reads.count("lineage") == 1
+        assert counts["rollup_1m"] == 0
+        assert counts["rollup_1d"] > 0
+        assert _lineage(io, "s") == _lineage(clean_io, "s")
+        assert _canon_chunks(io.read("chunks_1m")) == _canon_chunks(
+            clean_io.read("chunks_1m")
+        )
+        shutil.rmtree(io.root, ignore_errors=True)
+        shutil.rmtree(clean_io.root, ignore_errors=True)

@@ -7,13 +7,14 @@ ANY edit — including edits that add dead code to the measured job
 makes the "same executed job" claim checkable: it dumps the NORMALIZED
 physical plans (expr ids, temp paths, plan ids, file locations
 scrubbed) of exactly the DataFrames the scaling legs execute —
-observed slim, the 1h+1d kernel tier pass, the 1m dense base, and the
-Gorilla chunk build — on a fixed seed-42 synthetic input.
+observed slim, the fused kernel pass that cuts the 1h+1d windows and
+the Gorilla chunks, the 1m dense base, and the standalone chunk
+operator — on a fixed seed-42 synthetic input.
 
-Reproduce the round-4 witness:
-    python tools/plan_equiv.py /root/repo       CUR.txt
-    git worktree add /tmp/prev <rev-with-old-fingerprint>
-    python tools/plan_equiv.py /tmp/prev        PREV.txt
+Reproduce a witness against an older revision:
+    python tools/plan_equiv.py .          CUR.txt
+    mkdir PREV && git archive <rev> | tar -x -C PREV
+    python tools/plan_equiv.py PREV       PREV.txt
     diff PREV.txt CUR.txt        # empty => identical measured job
 
 Results on record (canonical dump: BENCH/MEASURED_PLANS.txt):
@@ -67,7 +68,9 @@ def main() -> None:
         texts.append(f"===== {name} =====\n{s}\n")
 
     cap("observed", obs)
-    cap("tiers_kernel", eng.build_rollup_tiers_kernel(obs))
+    tiers = eng.build_rollup_tiers_kernel(obs)
+    cap("tiers_kernel", tiers)
+    cap("chunks_from_tiers", eng.chunks_from_tiers(tiers))
     base = gap_fill_minutes(turn_rate_1m(df.select("conv_id", "ts")))
     cap("base_1m_dense", base)
     cap(
