@@ -2249,7 +2249,7 @@ def q_compression_stats(spark, sf_dir):
     zlib's CRC-32 over them with a list_reduce and a
     comprehension-generated 256-entry reflected-polynomial table. The
     sibling ``chunk_layout`` keeps the size-only analytic face."""
-    from chronoxtract_spark.operators.gapfill import gap_fill_minutes, turn_rate_1m
+    from chronoxtract_spark.operators.gapfill import turn_rate_1m
     from chronoxtract_spark.plans.rollup import RollupEngine
     from chronoxtract_spark.sources.tableio import temp_warehouse
 
@@ -2416,7 +2416,7 @@ def q_chunk_payloads(spark, sf_dir):
     checksums. This is the per-row invariant of BASELINE.json
     ("per-turn text equality under stable ordering") carried all the
     way down to the compressed representation."""
-    from chronoxtract_spark.operators.gapfill import gap_fill_minutes, turn_rate_1m
+    from chronoxtract_spark.operators.gapfill import turn_rate_1m
     from chronoxtract_spark.plans.rollup import RollupEngine
     from chronoxtract_spark.sources.tableio import temp_warehouse
 
@@ -5115,7 +5115,7 @@ def q_chunk_layout(spark, sf_dir):
     paper's sequential previous-window reuse), and leading/trailing
     zero counts are bit-smear + popcount, all expressible in DuckDB's
     integer ops. ``enc_size`` is then ts_size + val_size."""
-    from chronoxtract_spark.operators.gapfill import gap_fill_minutes, turn_rate_1m
+    from chronoxtract_spark.operators.gapfill import turn_rate_1m
     from chronoxtract_spark.plans.rollup import RollupEngine
     from chronoxtract_spark.sources.tableio import temp_warehouse
 

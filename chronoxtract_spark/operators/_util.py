@@ -2,8 +2,12 @@
 
 from __future__ import annotations
 
+import logging
 
-def spread_small_scan(df, min_factor: int = 1, target_factor: int = 2):
+log = logging.getLogger(__name__)
+
+
+def spread_small_scan(df):
     """Round-robin repartition when the input scan has fewer partitions
     than the session's parallelism.
 
@@ -17,14 +21,16 @@ def spread_small_scan(df, min_factor: int = 1, target_factor: int = 2):
     partition probe converts the plan to an RDD, which on a composed
     (already-shuffled) input can start upstream stages eagerly — call
     this only on raw scans (every caller in this engine does)."""
-    sc = df.sparkSession.sparkContext
-    target = max(sc.defaultParallelism * min_factor, 8)
+    target = max(df.sparkSession.sparkContext.defaultParallelism, 8)
     try:
         if df.rdd.getNumPartitions() >= target:
             return df
     except Exception:
+        log.warning(
+            "scan partition probe failed; input left unspread", exc_info=True
+        )
         return df
-    return df.repartition(max(sc.defaultParallelism, 8) * target_factor)
+    return df.repartition(target * 2)
 
 
 def keylist(keys: list[str] | str) -> list[str]:

@@ -1,16 +1,11 @@
 """Gap-fill: dense minute spine + interpolation.
 
 The north rule's gap-fill stage (BASELINE.json:north_star): per
-conversation, generate the dense 1-minute spine between the first and
-last observed minute with ``sequence()`` + ``explode``, left-join the
-observed per-minute aggregates, and interpolate missing values — all in
-window SQL, no Python.
-
-Scale notes: the spine explode produces rows proportional to each
-conversation's wall-clock span, partitioned with the same conv_id hash
-as the observed side, so the join co-locates after one shuffle each.
-Interpolation uses two bounded window passes (last-notnull backward,
-first-notnull forward) — no self-join.
+conversation, the dense 1-minute series between the first and last
+observed minute, with missing minutes linearly interpolated — all in
+SQL, no Python. ``kernel.gapfill.dense_from_observed`` is its numpy
+twin, bit-identical, for kernels that regenerate the dense series from
+the observed rows.
 """
 
 from __future__ import annotations
@@ -32,130 +27,52 @@ def turn_rate_1m(
     )
 
 
-def gap_fill_minutes(
-    observed: DataFrame,
-    conv_col: str = "conv_id",
-    minute_col: str = "minute_ts",
-    value_cols: tuple[str, ...] = ("turns",),
-    interpolate: str = "linear",
-    fanout_partitions: int | None = None,
-) -> DataFrame:
+def gap_fill_minutes(observed: DataFrame, n_days: int = 1) -> DataFrame:
     """Dense per-conversation minute series with linear interpolation
-    (SURVEY.md §7.1 step 5), built by **segment explosion**:
+    (SURVEY.md §7.1 step 5) from the observed ``(conv_id, minute_ts,
+    turns)`` rows: ``(conv_id, day, minute_ts, observed, turns, rate)``,
+    built by **segment explosion**.
 
-    each observed minute looks one observation ahead (``lead`` over the
-    small observed table), then explodes the half-open segment
-    ``[cur, next)`` into its dense minutes, computing the interpolated
-    ``rate`` at fan-out time. Equivalent output to spine-join +
-    forward/backward window fill, but the only window runs over the
-    *observed* rows (thousands), never the dense spine (millions) —
-    no sort, no shuffle, and no O(n²) unbounded-following frame touches
-    the fan-out. This is the shape that survives 10^12 rows.
+    Each observed minute looks one observation ahead (``lead`` over the
+    small observed table); the half-open segment ``[cur, next)`` first
+    explodes into the DAYS it covers (~1 row per observation), shuffles
+    on ``(day, salt(conv))`` so one task owns ~one day — the layout the
+    day-partitioned dense write needs (guide §8: decide placement on
+    small rows, explode after the exchange) — and only then explodes
+    into its dense minutes, computing the interpolated ``rate`` at
+    fan-out time. The only window and the only shuffle run over the
+    observed rows, never the ~1000x dense series: no sort and no
+    unbounded frame touches the fan-out.
 
-    interpolate: 'linear' (time-weighted blend between surrounding
-    observations) or 'zero' (missing minutes get rate 0).
+    A fan-out keyed on the conversation instead hands every write task
+    rows from ~all days, which forces either a per-task sort by
+    partition key (the default dynamic-partition writer — measured
+    115-200 s on the sf1.0 dense tier, spill-prone) or hundreds of
+    concurrently open parquet writers.
+
+    ``n_days`` is the number of day partitions the caller will write
+    (known driver-side: the candidate-day span union); callers that
+    only aggregate leave it at 1. The salt width keeps parallelism
+    scale-adaptive: tasks ~= 2x cores even when the commit window has
+    fewer days than cores.
     """
-    main = value_cols[0]
-    w = Window.partitionBy(conv_col).orderBy(minute_col)
-    seg = observed.withColumn("_next_ts", F.lead(minute_col).over(w)).withColumn(
-        "_next_val", F.lead(F.col(main).cast("double")).over(w)
-    )
-    # spread conversations before the ~1000x fan-out — the lead-window
-    # shuffle output is tiny, so AQE would otherwise coalesce to one
-    # partition and serialize the explode
-    if fanout_partitions is None:
-        # floor of 32 granules: conversation lengths are Zipf-skewed, so
-        # coarse granules straggle — a low-parallelism leg idles while
-        # one task drains a mega-conversation (measured +10% throughput
-        # at pinned 8 cores going 16 -> 32 granules). The factor stays
-        # 2x cores, not higher: each extra granule multiplies the
-        # day-partitioned writer's file count.
-        fanout_partitions = max(
-            observed.sparkSession.sparkContext.defaultParallelism * 2, 32
-        )
-    seg = seg.repartition(fanout_partitions, conv_col)
-
-    seg_end = F.coalesce(
-        F.col("_next_ts") - F.expr("interval 1 minute"), F.col(minute_col)
-    )
-    dense = seg.select(
-        F.col(conv_col),
-        F.col(minute_col).alias("_seg_start"),
-        *[F.col(c).alias(f"_obs_{c}") for c in value_cols],
-        "_next_ts",
-        "_next_val",
-        F.explode(
-            F.sequence(F.col(minute_col), seg_end, F.expr("interval 1 minute"))
-        ).alias(minute_col),
-    )
-    is_obs = F.col(minute_col) == F.col("_seg_start")
-    out = dense.withColumn("observed", is_obs)
-    for c in value_cols:
-        out = out.withColumn(
-            c, F.when(is_obs, F.col(f"_obs_{c}")).otherwise(F.lit(0))
-        )
-
-    prev_val = F.col(f"_obs_{main}").cast("double")
-    if interpolate == "zero":
-        rate = F.when(is_obs, prev_val).otherwise(F.lit(0.0))
-    else:
-        ts_s = F.unix_timestamp(minute_col)
-        frac = (ts_s - F.unix_timestamp("_seg_start")) / (
-            F.unix_timestamp("_next_ts") - F.unix_timestamp("_seg_start")
-        )
-        rate = F.when(is_obs, prev_val).otherwise(
-            prev_val + (F.col("_next_val") - prev_val) * frac
-        )
-    return out.withColumn("rate", rate).drop(
-        "_seg_start", "_next_ts", "_next_val", *[f"_obs_{c}" for c in value_cols]
-    )
-
-
-def gap_fill_minutes_day_keyed(
-    observed: DataFrame,
-    n_days: int,
-    conv_col: str = "conv_id",
-    minute_col: str = "minute_ts",
-    value_cols: tuple[str, ...] = ("turns",),
-    interpolate: str = "linear",
-) -> DataFrame:
-    """``gap_fill_minutes`` with the fan-out keyed by **day** — the
-    layout the day-partitioned dense write needs (guide §8: decide
-    placement on small rows, explode after the exchange).
-
-    The conv-keyed fan-out hands every write task rows from ~all days,
-    which forces either a per-task sort by partition key (the default
-    dynamic-partition writer — measured 115-200 s on the sf1.0 dense
-    tier, spill-prone) or hundreds of concurrently open parquet writers
-    (memory-manager row-group rescaling). Here each observed segment
-    first explodes into the DAYS it covers (~1 row per observation —
-    observed-scale), shuffles on ``(day, salt(conv))`` so one task owns
-    ~one day, and only then explodes to dense minutes. Identical rows
-    to ``gap_fill_minutes`` + ``to_date(minute_ts)`` (same interpolation
-    expressions, same segment endpoints), plus the ``day`` column.
-
-    ``n_days`` is known driver-side (the candidate-day span union); the
-    salt width keeps parallelism scale-adaptive: tasks ~= 2x cores even
-    when the commit window has fewer days than cores.
-    """
-    main = value_cols[0]
-    w = Window.partitionBy(conv_col).orderBy(minute_col)
-    seg = observed.withColumn("_next_ts", F.lead(minute_col).over(w)).withColumn(
-        "_next_val", F.lead(F.col(main).cast("double")).over(w)
+    w = Window.partitionBy("conv_id").orderBy("minute_ts")
+    seg = observed.withColumn("_next_ts", F.lead("minute_ts").over(w)).withColumn(
+        "_next_val", F.lead(F.col("turns").cast("double")).over(w)
     )
     seg_end = F.coalesce(
-        F.col("_next_ts") - F.expr("interval 1 minute"), F.col(minute_col)
+        F.col("_next_ts") - F.expr("interval 1 minute"), F.col("minute_ts")
     )
     dayseg = seg.select(
-        F.col(conv_col),
-        F.col(minute_col).alias("_seg_start"),
-        *[F.col(c).alias(f"_obs_{c}") for c in value_cols],
+        "conv_id",
+        F.col("minute_ts").alias("_seg_start"),
+        F.col("turns").alias("_obs_turns"),
         "_next_ts",
         "_next_val",
         seg_end.alias("_seg_end"),
         F.explode(
             F.sequence(
-                F.to_date(minute_col), F.to_date(seg_end),
+                F.to_date("minute_ts"), F.to_date(seg_end),
                 F.expr("interval 1 day"),
             )
         ).alias("day"),
@@ -167,16 +84,16 @@ def gap_fill_minutes_day_keyed(
     # leave at most a couple of groups (= open writers) per task
     n_part = max(2 * max(n_days, 1) * salts, 2 * cores, 32)
     dayseg = dayseg.repartition(
-        n_part, "day", F.pmod(F.xxhash64(conv_col), F.lit(salts))
+        n_part, "day", F.pmod(F.xxhash64("conv_id"), F.lit(salts))
     )
     day_start = F.col("day").cast("timestamp")
     day_end = F.col("day").cast("timestamp") + F.expr(
         "interval 23 hours 59 minutes"
     )
     dense = dayseg.select(
-        F.col(conv_col),
+        "conv_id",
         "_seg_start",
-        *[f"_obs_{c}" for c in value_cols],
+        "_obs_turns",
         "_next_ts",
         "_next_val",
         "day",
@@ -186,26 +103,23 @@ def gap_fill_minutes_day_keyed(
                 F.least(F.col("_seg_end"), day_end),
                 F.expr("interval 1 minute"),
             )
-        ).alias(minute_col),
+        ).alias("minute_ts"),
     )
-    is_obs = F.col(minute_col) == F.col("_seg_start")
-    out = dense.withColumn("observed", is_obs)
-    for c in value_cols:
-        out = out.withColumn(
-            c, F.when(is_obs, F.col(f"_obs_{c}")).otherwise(F.lit(0))
+    is_obs = F.col("minute_ts") == F.col("_seg_start")
+    prev_val = F.col("_obs_turns").cast("double")
+    frac = (F.unix_timestamp("minute_ts") - F.unix_timestamp("_seg_start")) / (
+        F.unix_timestamp("_next_ts") - F.unix_timestamp("_seg_start")
+    )
+    return (
+        dense.withColumn("observed", is_obs)
+        .withColumn(
+            "turns", F.when(is_obs, F.col("_obs_turns")).otherwise(F.lit(0))
         )
-    prev_val = F.col(f"_obs_{main}").cast("double")
-    if interpolate == "zero":
-        rate = F.when(is_obs, prev_val).otherwise(F.lit(0.0))
-    else:
-        ts_s = F.unix_timestamp(minute_col)
-        frac = (ts_s - F.unix_timestamp("_seg_start")) / (
-            F.unix_timestamp("_next_ts") - F.unix_timestamp("_seg_start")
+        .withColumn(
+            "rate",
+            F.when(is_obs, prev_val).otherwise(
+                prev_val + (F.col("_next_val") - prev_val) * frac
+            ),
         )
-        rate = F.when(is_obs, prev_val).otherwise(
-            prev_val + (F.col("_next_val") - prev_val) * frac
-        )
-    return out.withColumn("rate", rate).drop(
-        "_seg_start", "_next_ts", "_next_val",
-        *[f"_obs_{c}" for c in value_cols],
+        .drop("_seg_start", "_next_ts", "_next_val", "_obs_turns")
     )

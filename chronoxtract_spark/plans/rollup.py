@@ -41,10 +41,7 @@ from chronoxtract_spark import compression as cxc
 from chronoxtract_spark import functions as cxf
 from chronoxtract_spark.kernel import gapfill as k_gapfill
 from chronoxtract_spark.operators import features as ops_features
-from chronoxtract_spark.operators.gapfill import (
-    gap_fill_minutes_day_keyed,
-    turn_rate_1m,
-)
+from chronoxtract_spark.operators.gapfill import gap_fill_minutes, turn_rate_1m
 
 TIERS = ("rollup_1m", "rollup_1h", "rollup_1d")
 LINEAGE_TABLE = "lineage"
@@ -62,7 +59,7 @@ CHUNK_TABLE = "chunks_1m"
 #: ~0.14 µs/row. Breakeven ≈ 14 days of metrics exprs. Incremental
 #: daily loads — the regime a 100 TB deployment actually commits in —
 #: always ride the observe path; bulk backfills pay one re-scan.
-#: SMALL tiers (1h/1d/chunks: a few rows per conv-day) pass a higher
+#: SMALL tiers (1h/1d/chunks: a few rows per conv-day) have a higher
 #: cap because rows, not days, dominate their metric cost.
 MAX_OBSERVE_DAYS = 16
 MAX_OBSERVE_DAYS_SMALL = 366
@@ -223,8 +220,7 @@ class RollupEngine:
         table: str,
         days: list[str],
         source_snapshot: str,
-        day_repartition: bool = False,
-        observe_day_cap: int | None = None,
+        small_tier: bool = False,
     ) -> int:
         """Partitioned dynamic-overwrite write whose per-day lineage
         metrics (row count + an order-insensitive bit_xor(xxhash64)
@@ -249,10 +245,16 @@ class RollupEngine:
         files, RECOMPUTES the hash from the data columns, and asserts
         equality with the committed checksums (opt-in write audit).
 
+        ``small_tier`` marks the 1h/1d/chunk tables (a few rows per
+        conv-day, keyed by ``conv_id``): they are repartitioned by day
+        before the write, written in a canonical row order, and keep the
+        observe path up to MAX_OBSERVE_DAYS_SMALL days.
+
         Returns the total committed row count."""
-        if observe_day_cap is None:
-            observe_day_cap = MAX_OBSERVE_DAYS
-        if day_repartition:
+        observe_day_cap = (
+            MAX_OBSERVE_DAYS_SMALL if small_tier else MAX_OBSERVE_DAYS
+        )
+        if small_tier:
             # collapse tasks-x-days small files (guide §6: a 30-day x
             # 64-task commit writes ~2000 tiny files and the write
             # spends 5x longer opening/committing files than encoding
@@ -268,7 +270,7 @@ class RollupEngine:
                 self.spark.sparkContext.defaultParallelism
                 // max(len(days), 1),
             )
-            if k > 1 and "conv_id" in df.columns:
+            if k > 1:
                 df = df.repartition(
                     F.col("day"), F.pmod(F.xxhash64("conv_id"), F.lit(k))
                 )
@@ -294,6 +296,14 @@ class RollupEngine:
             ),
         )
 
+        def write(out):
+            if small_tier:
+                # the shuffle hands rows over in map-output order, so
+                # without a total order the same rows from a different
+                # upstream partitioning would write different bytes
+                out = out.sortWithinPartitions("day", "conv_id", "row_hash")
+            self.io.overwrite_partitions(out, table, ["day"])
+
         if len(days) > observe_day_cap:
             # bulk backfill: per-day metrics from a thin (day, row_hash)
             # read-back of the files just written (page-cache warm).
@@ -301,7 +311,7 @@ class RollupEngine:
             # uses date literals and the group key stays an integer-
             # backed date — the string render happens once per DAY on
             # the driver, never per row.
-            self.io.overwrite_partitions(hashed, table, ["day"])
+            write(hashed)
             back = (
                 self.io.read(table)
                 .filter(F.to_date(F.col("day")).isin(_day_dates(days)))
@@ -337,8 +347,7 @@ class RollupEngine:
                     F.bit_xor(F.when(m, F.col("row_hash"))).alias(f"x{di}")
                 )
             obs = Observation(f"lineage_{table}")
-            out = hashed.observe(obs, *exprs).drop("_di")
-            self.io.overwrite_partitions(out, table, ["day"])
+            write(hashed.observe(obs, *exprs).drop("_di"))
             vals = obs.get
             now = int(time.time() * 1000)
             rows = [
@@ -623,8 +632,8 @@ class RollupEngine:
             # shuffle on (day, salt) BEFORE the ~1000x minute explode, so
             # each write task owns ~one day partition — no per-task sort by
             # partition key, no hundred-writer memory pressure, and day
-            # files come out task-sized (row set identical to the conv-keyed
-            # fan-out; tests pin the equivalence).
+            # files come out task-sized (tests pin the rows to the numpy
+            # twin, kernel.gapfill.dense_from_observed).
             #
             # (An overlapped variant — dense write on a pool thread while
             # the chunk/kernel legs run, guide §2.6 — was measured and
@@ -632,7 +641,7 @@ class RollupEngine:
             # same cores, and the interleaving ran the whole pipeline
             # 1.6x SLOWER than sequential legs at sf1.0.)
             if new_1m:
-                base = gap_fill_minutes_day_keyed(observed, len(all_days))
+                base = gap_fill_minutes(observed, len(all_days))
                 tier_1m = _day_filter(self.build_rollup_1m(base), new_1m)
                 counts["rollup_1m"] = self._write_with_lineage(
                     tier_1m, "rollup_1m", new_1m, source_snapshot
@@ -653,8 +662,7 @@ class RollupEngine:
             def commit_small(df, table, days):
                 return self._write_with_lineage(
                     _day_filter(df, days), table, days, source_snapshot,
-                    day_repartition=True,
-                    observe_day_cap=MAX_OBSERVE_DAYS_SMALL,
+                    small_tier=True,
                 )
 
             def tier(width, ts_name):

@@ -77,35 +77,35 @@ class TestPlanShapes:
 class TestKillResume:
     def test_partial_commit_then_resume_completes(self, spark):
         """SURVEY §5.2 item 6: simulate a crash after the 1m tier
-        committed but before 1h/1d; the re-run must complete the missing
-        tiers without duplicating the committed one."""
+        committed — through the fan-out and tier builder run() uses —
+        but before the chunks, 1h and 1d; the re-run must complete the
+        missing tables without redoing the committed one, and end with
+        the lineage rows and checksums of a clean run."""
         import shutil
 
-        from pyspark.sql import functions as F
-
+        from chronoxtract_spark.operators.gapfill import gap_fill_minutes
         from chronoxtract_spark.plans.rollup import RollupEngine
         from chronoxtract_spark.sources.tableio import temp_warehouse
         from chronoxtract_spark.synth import synth_transcripts
 
-        tr = synth_transcripts(spark, n_conversations=10, seed=9)
-        io = temp_warehouse(spark)
-        eng = RollupEngine(spark, io, compress=False)
+        def lineage(io):
+            return {
+                (r.tier, r.partition_key): (r.row_count, r.checksum)
+                for r in io.read("lineage").collect()
+            }
 
-        # full run once to learn expected counts
-        io2 = temp_warehouse(spark)
-        eng_ref = RollupEngine(spark, io2, compress=False)
-        expected = eng_ref.run(tr, source_snapshot="s")
+        tr = synth_transcripts(spark, n_conversations=10, seed=9)
+        clean_io = temp_warehouse(spark)
+        expected = RollupEngine(spark, clean_io).run(tr, source_snapshot="s")
 
         # "crashed" run: commit only the 1m tier + its lineage, then stop
+        io = temp_warehouse(spark)
+        eng = RollupEngine(spark, io)
         observed = eng.build_observed(tr)
-        from chronoxtract_spark.operators.gapfill import gap_fill_minutes
-
-        base = gap_fill_minutes(observed).withColumn(
-            "day", F.date_format("minute_ts", "yyyy-MM-dd")
-        )
-        tier_1m = eng.build_rollup_1m(base)
-        days = sorted(r["day"] for r in tier_1m.select("day").distinct().collect())
+        days = eng._candidate_days(observed)
+        tier_1m = eng.build_rollup_1m(gap_fill_minutes(observed, len(days)))
         eng._write_with_lineage(tier_1m, "rollup_1m", days, "s")
+        assert {k[0] for k in lineage(io)} == {"rollup_1m"}
 
         # resume: full run against the same snapshot
         counts = eng.run(tr, source_snapshot="s")
@@ -113,10 +113,10 @@ class TestKillResume:
         assert counts["rollup_1h"] == expected["rollup_1h"]
         assert counts["rollup_1d"] == expected["rollup_1d"]
         assert io.read("rollup_1m").count() == expected["rollup_1m"]
-        assert io.read("rollup_1h").count() == expected["rollup_1h"]
+        assert lineage(io) == lineage(clean_io)
 
         shutil.rmtree(io.root, ignore_errors=True)
-        shutil.rmtree(io2.root, ignore_errors=True)
+        shutil.rmtree(clean_io.root, ignore_errors=True)
 
     def test_embedding_near_dups_has_no_cross_join(self, spark):
         """The LSH-bucketed near-dup path must plan as equi-joins on the

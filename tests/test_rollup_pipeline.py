@@ -154,32 +154,73 @@ class TestRollupPipeline:
         assert bad == 0
 
     def test_day_keyed_gapfill_row_identical(self, spark, transcripts):
-        """The day-keyed dense fan-out (the 1m write path) must produce
-        the exact row set of the conv-keyed gap_fill_minutes + to_date —
-        same minutes, same interpolated rates bit-for-bit."""
+        """The day-keyed dense fan-out (the 1m write path) gives, per
+        conversation, exactly the rows of its numpy twin
+        kernel.gapfill.dense_from_observed over the observed rows: same
+        minutes, turns and observed flags, each minute's own UTC day,
+        and interpolated rates equal bit for bit — across a
+        conversation that crosses midnight and a one-point one."""
+        import pandas as pd
+
+        from chronoxtract_spark.kernel.gapfill import dense_from_observed
         from chronoxtract_spark.operators.gapfill import (
             gap_fill_minutes,
-            gap_fill_minutes_day_keyed,
             turn_rate_1m,
         )
 
-        observed = turn_rate_1m(transcripts)
+        crafted = spark.createDataFrame(
+            [
+                ("midnight", "2026-01-01 23:57:10"),
+                ("midnight", "2026-01-01 23:57:40"),
+                ("midnight", "2026-01-02 00:04:00"),
+                ("one", "2026-01-05 12:00:00"),
+            ],
+            "conv_id string, ts string",
+        ).withColumn("ts", F.to_timestamp("ts"))
+        observed = turn_rate_1m(
+            transcripts.select("conv_id", "ts").unionByName(crafted)
+        )
         n_days = (
             observed.select(F.to_date("minute_ts").alias("d"))
             .distinct()
             .count()
         )
-        ref = gap_fill_minutes(observed).withColumn(
-            "day", F.to_date("minute_ts")
+        obs = observed.select(
+            "conv_id", F.unix_timestamp("minute_ts").alias("t"), "turns"
+        ).toPandas()
+        parts = []
+        for conv, g in obs.sort_values("t").groupby("conv_id"):
+            t, rate, turns, is_obs = dense_from_observed(
+                g["t"].to_numpy(), g["turns"].to_numpy()
+            )
+            parts.append(pd.DataFrame({
+                "conv_id": conv, "t": t, "rate": rate,
+                "turns": turns.astype(np.int64), "observed": is_obs,
+                "day": t // 86400,
+            }))
+        want = pd.concat(parts).sort_values(["conv_id", "t"])
+
+        got = (
+            gap_fill_minutes(observed, n_days)
+            .select(
+                "conv_id",
+                F.unix_timestamp("minute_ts").alias("t"),
+                "rate",
+                "turns",
+                "observed",
+                F.unix_date("day").cast("long").alias("day"),
+            )
+            .toPandas()
+            .sort_values(["conv_id", "t"])
         )
-        new = gap_fill_minutes_day_keyed(observed, n_days)
-        cols = sorted(ref.columns)
-        assert sorted(new.columns) == cols
-        a = ref.select(*cols)
-        b = new.select(*cols)
-        assert a.count() == b.count()
-        assert a.exceptAll(b).count() == 0
-        assert b.exceptAll(a).count() == 0
+        assert {"midnight", "one"} <= set(got["conv_id"])
+        assert len(got) == len(want)
+        for c in ("conv_id", "t", "turns", "observed", "day"):
+            np.testing.assert_array_equal(got[c].to_numpy(), want[c].to_numpy())
+        np.testing.assert_array_equal(
+            got["rate"].to_numpy(np.float64).view(np.int64),
+            want["rate"].to_numpy(np.float64).view(np.int64),
+        )
 
     def test_moment_state_merge_exact(self, spark, engine_run):
         """1d moments derived from the kernel pass's day-window state
@@ -295,6 +336,35 @@ class TestRollupPipeline:
         assert observe_lineage == fallback_lineage
         shutil.rmtree(io.root, ignore_errors=True)
         shutil.rmtree(io2.root, ignore_errors=True)
+
+    def test_small_tier_bytes_are_canonical(self, spark):
+        """A small-tier commit writes the same parquet bytes for the
+        same rows however they were partitioned upstream: the shuffle
+        before the write hands rows over in map-output order, so the
+        write puts them in a canonical order first."""
+        import glob
+        import os
+        import shutil
+
+        days = ["2026-01-01", "2026-01-02", "2026-01-03"]
+        rows = [(f"c{i % 23}", days[i % 3], i * 0.37) for i in range(600)]
+        files = []
+        for data, slices in ((rows, 1), (rows[::-1], 5)):
+            upstream = spark.sparkContext.parallelize(data, slices).toDF(
+                "conv_id string, day string, value double"
+            )
+            io = temp_warehouse(spark)
+            RollupEngine(spark, io)._write_with_lineage(
+                upstream, "t", days, "s", small_tier=True
+            )
+            per_day = {}
+            for d in days:
+                paths = glob.glob(os.path.join(io.root, "t", f"day={d}", "part-*"))
+                assert paths
+                per_day[d] = sorted(open(f, "rb").read() for f in paths)
+            files.append(per_day)
+            shutil.rmtree(io.root, ignore_errors=True)
+        assert files[0] == files[1]
 
     def test_resume_skips_committed(self, spark, transcripts, engine_run):
         io, eng, counts = engine_run

@@ -8,8 +8,9 @@ makes the "same executed job" claim checkable: it dumps the NORMALIZED
 physical plans (expr ids, temp paths, plan ids, file locations
 scrubbed) of exactly the DataFrames the scaling legs execute —
 observed slim, the fused kernel pass that cuts the 1h+1d windows and
-the Gorilla chunks, the 1m dense base, and the standalone chunk
-operator — on a fixed seed-42 synthetic input.
+the Gorilla chunks, the engine's day-keyed 1m fan-out, and the
+standalone chunk operator over the observed rows — on a fixed seed-42
+synthetic input.
 
 Reproduce a witness against an older revision:
     python tools/plan_equiv.py .          CUR.txt
@@ -35,10 +36,7 @@ def main() -> None:
     repo = sys.argv[1] if len(sys.argv) > 1 else "."
     out = sys.argv[2] if len(sys.argv) > 2 else "MEASURED_PLANS.txt"
     sys.path.insert(0, repo)
-    from chronoxtract_spark.operators.gapfill import (
-        gap_fill_minutes,
-        turn_rate_1m,
-    )
+    from chronoxtract_spark.operators.gapfill import gap_fill_minutes
     from chronoxtract_spark.plans.rollup import RollupEngine
     from chronoxtract_spark.session import get_spark
     from chronoxtract_spark.sources.tableio import temp_warehouse
@@ -71,16 +69,8 @@ def main() -> None:
     tiers = eng.build_rollup_tiers_kernel(obs)
     cap("tiers_kernel", tiers)
     cap("chunks_from_tiers", eng.chunks_from_tiers(tiers))
-    base = gap_fill_minutes(turn_rate_1m(df.select("conv_id", "ts")))
-    cap("base_1m_dense", base)
-    cap(
-        "chunks",
-        eng.build_chunks(
-            base.withColumn(
-                "day", base.minute_ts.cast("date").cast("string")
-            )
-        ),
-    )
+    cap("base_1m_dense", gap_fill_minutes(obs, len(eng._candidate_days(obs))))
+    cap("chunks", eng.build_chunks(obs))
     with open(out, "w") as f:
         f.write("\n".join(texts))
     print(f"wrote {out} ({sum(t.count(chr(10)) for t in texts)} lines)")
